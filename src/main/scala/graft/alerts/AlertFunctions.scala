@@ -46,9 +46,6 @@ object AlertFunctions {
   def timestampToJd(ts: Column): Column =
     unix_micros(ts).cast("double") / lit(86400000000.0) + lit(2440587.5)
 
-  /** Modified Julian Date: MJD = JD − 2400000.5. */
-  def jdToMjd(jd: Column): Column = jd - lit(2400000.5)
-
   /** F1 quality cuts (ref: bin/ztf/raw2science.py:92-95): clean
     * detections only — no bad pixels, real-bogus above threshold, and a
     * physical filter band.

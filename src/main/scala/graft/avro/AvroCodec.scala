@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst ⇄ Avro generic-datum value conversion, driven by the Spark
   * schema (the Avro schema is derived, so shapes always agree). Used by
-  * the [[ToAvro]]/[[FromAvro]] expressions.
+  * the [[ToAvro]]/[[FromAvro]] expressions and [[AvroFiles]].
   */
 object AvroCodec {
 
@@ -94,10 +94,16 @@ object AvroCodec {
         val in = value.asInstanceOf[java.util.Collection[Any]].asScala
         new GenericArrayData(in.map(avroToCatalyst(_, elem)).toArray)
       case MapType(StringType, v, _) =>
-        val in = value.asInstanceOf[java.util.Map[Any, Any]].asScala
-        ArrayBasedMapData(
-          in.keys.map(k => UTF8String.fromString(k.toString)).toArray,
-          in.values.map(avroToCatalyst(_, v)).toArray)
+        val in = value.asInstanceOf[java.util.Map[Any, Any]]
+        val keys = new Array[Any](in.size)
+        val vals = new Array[Any](in.size)
+        var i = 0
+        in.forEach { (k, x) =>
+          keys(i) = UTF8String.fromString(k.toString)
+          vals(i) = avroToCatalyst(x, v)
+          i += 1
+        }
+        ArrayBasedMapData(keys, vals)
       case st: StructType =>
         val rec = value.asInstanceOf[GenericRecord]
         val out = new GenericInternalRow(st.length)

@@ -3,11 +3,13 @@ package graft.avro
 import scala.collection.JavaConverters._
 
 import org.apache.avro.Schema
-import org.apache.avro.file.{DataFileReader, DataFileStream, DataFileWriter}
+import org.apache.avro.file.{DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.types.StructType
 
 /** S4/K5: Avro container-file scan and write without spark-avro.
@@ -21,14 +23,16 @@ import org.apache.spark.sql.types.StructType
   */
 object AvroFiles {
 
-  /** The StructType of an Avro container file (the reference's actual
-    * use of S4: schema probing).
+  /** The StructType of an Avro container file, or of the first one
+    * under a directory (the reference's actual use of S4: schema
+    * probing).
     */
-  def readSchema(spark: SparkSession, path: String): StructType = {
-    val fs = FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val file = firstAvroFile(fs, new Path(path))
-    val in = fs.open(file)
+  def readSchema(spark: SparkSession, path: String): StructType =
+    schemaOf(spark, avroFiles(spark, path).head)
+
+  private def schemaOf(spark: SparkSession, file: Path): StructType = {
+    val in = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .open(file)
     try {
       val stream = new DataFileStream[GenericRecord](
         in, new GenericDatumReader[GenericRecord]())
@@ -38,13 +42,16 @@ object AvroFiles {
     } finally in.close()
   }
 
-  private def firstAvroFile(fs: FileSystem, p: Path): Path = {
-    val st = fs.getFileStatus(p)
-    if (st.isFile) p
-    else fs.listStatus(p).filter(_.getPath.getName.endsWith(".avro"))
-      .sortBy(_.getPath.getName).headOption
-      .map(_.getPath)
-      .getOrElse(throw new IllegalArgumentException(s"no .avro files under $p"))
+  /** `path` itself if it is a file, else its `.avro` files by name. */
+  private def avroFiles(spark: SparkSession, path: String): Seq[Path] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      if (fs.getFileStatus(root).isFile) Seq(root)
+      else fs.listStatus(root).map(_.getPath)
+        .filter(_.getName.endsWith(".avro")).sortBy(_.getName).toSeq
+    require(files.nonEmpty, s"no .avro files under $path")
+    files
   }
 
   /** Write `df` as `part-NNNNN.avro` container files under `dir`. */
@@ -72,68 +79,24 @@ object AvroFiles {
   }
 
   /** Read all container files under `dir` (or a single file) into a
-    * DataFrame — one task per file.
+    * DataFrame — one task per file, decoded straight to Catalyst rows.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val root = new Path(path)
-    val files: Seq[String] =
-      if (fs.getFileStatus(root).isFile) Seq(path)
-      else fs.listStatus(root).filter(_.getPath.getName.endsWith(".avro"))
-        .map(_.getPath.toString).sorted.toSeq
-    require(files.nonEmpty, s"no .avro files under $path")
-    val sparkSchema = readSchema(spark, files.head)
+    val files = avroFiles(spark, path)
+    val sparkSchema = schemaOf(spark, files.head)
     val rdd = spark.sparkContext
-      .parallelize(files, files.size)
+      .parallelize(files.map(_.toString), files.size)
       .flatMap { f =>
-        val conf = new Configuration()
         val p = new Path(f)
-        val in = p.getFileSystem(conf).open(p)
+        val in = p.getFileSystem(new Configuration()).open(p)
         val stream = new DataFileStream[GenericRecord](
           in, new GenericDatumReader[GenericRecord]())
-        val out = Iterator
-          .continually(())
-          .takeWhile(_ => stream.hasNext)
-          .map { _ => avroToExternalRow(stream.next(), sparkSchema) }
+        val out = stream.iterator.asScala
+          .map(AvroCodec.avroToCatalyst(_, sparkSchema).asInstanceOf[InternalRow])
           .toVector // files are bounded; drain before closing
         stream.close()
         out
       }
-    spark.createDataFrame(rdd, sparkSchema)
-  }
-
-  /** Avro datum → external Row (createDataFrame-compatible values). */
-  private def avroToExternalRow(rec: GenericRecord, st: StructType): Row = {
-    import org.apache.spark.sql.types._
-    def conv(value: Any, dt: DataType): Any = {
-      if (value == null) return null
-      dt match {
-        case StringType => value.toString
-        case BinaryType =>
-          value match {
-            case bb: java.nio.ByteBuffer =>
-              val a = new Array[Byte](bb.remaining()); bb.duplicate().get(a); a
-            case arr: Array[Byte] => arr
-          }
-        case TimestampType =>
-          java.sql.Timestamp.from(
-            java.time.Instant.EPOCH.plusNanos(value.asInstanceOf[Long] * 1000L))
-        case DateType =>
-          java.sql.Date.valueOf(
-            java.time.LocalDate.ofEpochDay(value.asInstanceOf[Int].toLong))
-        case ArrayType(e, _) =>
-          value.asInstanceOf[java.util.Collection[Any]].asScala.map(conv(_, e)).toSeq
-        case MapType(StringType, v, _) =>
-          value.asInstanceOf[java.util.Map[Any, Any]].asScala.map {
-            case (k, x) => k.toString -> conv(x, v)
-          }.toMap
-        case s: StructType => rowOf(value.asInstanceOf[GenericRecord], s)
-        case _ => value
-      }
-    }
-    def rowOf(r: GenericRecord, s: StructType): Row =
-      Row.fromSeq(s.fields.zipWithIndex.map { case (f, i) => conv(r.get(i), f.dataType) }.toSeq)
-    rowOf(rec, st)
+    shims.createDataFrame(spark, rdd, sparkSchema)
   }
 }

@@ -22,15 +22,24 @@ import org.apache.spark.sql.types.{BinaryType, DataType, StructType}
   * Writer/reader and scratch buffers are reused per task via lazy
   * fields — the expression instance is per-task in both the
   * interpreted and generated paths.
+  *
+  * `schemaJson` fixes the writer schema. Without it the schema is
+  * derived from the BOUND child type, whose nullability the physical
+  * plan may tighten (a filter on a nullable column makes it
+  * non-nullable) — so the bytes can follow a narrower schema than the
+  * analyzed frame's. A writer that publishes its schema beside the
+  * bytes (a Kafka key) passes that same schema here.
   */
-case class ToAvro(child: Expression) extends UnaryExpression {
+case class ToAvro(child: Expression, schemaJson: Option[String] = None)
+    extends UnaryExpression {
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "graft_to_avro"
 
   private lazy val sparkType = child.dataType
-  @transient private lazy val avroSchema =
-    AvroSchemaConverter.toAvro(sparkType)
+  @transient private lazy val avroSchema = schemaJson
+    .map(new Schema.Parser().parse(_))
+    .getOrElse(AvroSchemaConverter.toAvro(sparkType))
   @transient private lazy val writer =
     new GenericDatumWriter[Any](AvroCodec.unwrapUnion(avroSchema))
   @transient private lazy val out = new ByteArrayOutputStream()

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass language-ID over a token array — the compiled form of
-  * [[TextFunctions.langIdHof]] (value-identical, equivalence-tested):
+  * TextAnalysisSpec's HOF reference (value-identical, equivalence-tested):
   * score(lang) = |distinct tokens ∩ markers(lang)|, detected = the
   * alphabetically-first language reaching the maximum score, "und"
   * when every score is zero.

@@ -24,43 +24,19 @@ object TextFunctions {
 
   /** Distinct word n-gram shingles, e.g. n=3: "a b c d" → ["a b c","b c d"].
     * Documents shorter than n tokens yield an empty array. Evaluated by
-    * the single-pass [[HashFunctions.wordNGrams]] expression;
-    * [[wordShinglesHof]] is its value-identical HOF spelling.
+    * the single-pass [[HashFunctions.wordNGrams]] expression; DedupSpec
+    * checks it against a value-identical HOF spelling.
     */
   def wordShingles(c: Column, n: Int): Column =
     HashFunctions.wordNGrams(tokens(c), n)
 
-  /** HOF reference form of [[wordShingles]], kept for equivalence
-    * testing. Guard: sequence(1, 0) DESCENDS in Spark, which would feed
-    * slice a zero start — short docs must yield an empty array instead.
-    */
-  def wordShinglesHof(c: Column, n: Int): Column = {
-    val toks = tokens(c)
-    when(
-      size(toks) >= n,
-      array_distinct(
-        transform(
-          sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n))))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** MinHash signature: k independent min-hashes over the shingle set.
     * Hash family i is `xxhash64(shingle, i)`. Evaluated by the
-    * single-pass [[HashFunctions.minhashSig]] expression; the HOF
-    * spelling below computes identical values and serves as its
-    * cross-check oracle in DedupSpec.
+    * single-pass [[HashFunctions.minhashSig]] expression; DedupSpec
+    * checks it against a value-identical HOF spelling.
     */
   def minhashSignature(shingles: Column, k: Int): Column =
     HashFunctions.minhashSig(shingles, k)
-
-  /** Reference HOF form of [[minhashSignature]] (k× slower: re-hashes
-    * the string per lane) — kept for equivalence testing.
-    */
-  def minhashSignatureHof(shingles: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingles, s => xxhash64(s, i))))
 
   /** LSH band keys for a MinHash signature: b bands of r rows each; key =
     * hash of (band index, the r signature slots). Two docs sharing any
@@ -91,29 +67,10 @@ object TextFunctions {
     * up/down; the fingerprint takes the sign of each bit's tally.
     * Near-identical docs land within a few bits of Hamming distance.
     * Evaluated by the single-pass [[HashFunctions.simhash64]]
-    * expression; [[simhash64Hof]] is its value-identical cross-check.
+    * expression; DedupSpec checks it against a value-identical HOF
+    * spelling.
     */
   def simhash64(toks: Column): Column = HashFunctions.simhash64(toks)
-
-  /** Reference HOF form of [[simhash64]] (64 folds over the tokens) —
-    * kept for equivalence testing.
-    */
-  def simhash64Hof(toks: Column): Column = {
-    def tally(i: Int): Column =
-      aggregate(
-        toks,
-        lit(0),
-        (acc, t) =>
-          acc + when(shiftrightunsigned(xxhash64(t), i).bitwiseAND(1) === 1, 1)
-            .otherwise(-1))
-    (63 to 0 by -1).foldLeft(lit(0L)) { (acc, i) =>
-      shiftleft(acc, 1).bitwiseOR(when(tally(i) > 0, 1L).otherwise(0L))
-    }
-  }
-
-  /** Hamming distance between two simhash64 fingerprints. */
-  def hamming64(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 
   /** Language-marker vocabularies for the n-gram/stopword lang-ID
     * heuristic. Top high-frequency function words per language — a
@@ -130,37 +87,11 @@ object TextFunctions {
   /** Heuristic language ID: the language whose marker set overlaps the
     * token set most; ties and zero overlap → "und" (undetermined).
     * Evaluated by the single-pass [[LangIdExpr]] expression;
-    * [[langIdHof]] is its value-identical HOF spelling (equivalence-
-    * tested in TextAnalysisSpec).
+    * TextAnalysisSpec checks it against a value-identical HOF
+    * spelling.
     */
   def langId(c: Column): Column =
     LangIdFunctions.langIdExpr(tokens(lower(c)))
-
-  /** Reference HOF form of [[langId]] — kept for equivalence testing. */
-  def langIdHof(c: Column): Column = {
-    // let-binding via singleton-array transform: a naive expression tree
-    // here re-embeds the tokenizer in every when-branch (each branch
-    // references `best`, which references all five intersects, which each
-    // reference the token set — ~30 tokenizer copies that CaseWhen keeps
-    // out of subexpression elimination). Binding the token set, then the
-    // score struct, as single-element transform scopes evaluates the
-    // tokenize once and each marker intersect once per row.
-    val marks = langMarkers.toSeq.sortBy(_._1)
-    val toksOnce = array(array_distinct(tokens(lower(c))))
-    val scoresOnce = transform(toksOnce, tk =>
-      struct(marks.map { case (lang, words) =>
-        size(array_intersect(tk, array(words.map(lit): _*))).as(s"s_$lang")
-      }: _*))
-    element_at(
-      transform(scoresOnce, sc => {
-        val scores = marks.map { case (lang, _) => lang -> sc.getField(s"s_$lang") }
-        val best = greatest(scores.map(_._2): _*)
-        scores.foldRight(lit("und")) { case ((lang, s), el) =>
-          when(s === best && best > 0, lit(lang)).otherwise(el)
-        }
-      }),
-      1)
-  }
 
   /** Quality metrics struct: character/token counts and ratio features
     * (alpha ratio, whitespace ratio, mean token length, stopword ratio)

@@ -143,7 +143,7 @@ case class HyperplaneLshBuckets(
 
 /** Pairwise cosine similarity of two vector columns as one primitive-
   * loop expression — value-identical to the `zip_with`+`aggregate` HOF
-  * form in VectorFunctions.cosineHof (same sequential fold:
+  * form in SimilaritySpec (same sequential fold:
   * dot = ((0+x0y0)+x1y1)+…, result = dot / (sqrt(aa)·sqrt(bb)), NULL
   * when either norm is 0), without rows×dim interpreted lambda steps.
   * This is the verify-stage kernel of the candidate-pair pipelines

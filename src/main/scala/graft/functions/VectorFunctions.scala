@@ -1,42 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Embedding-vector column library for similarity search (SURVEY §7.5).
   *
   * Vectors are plain `array<float>` columns; arithmetic is done in
-  * double via `zip_with`/`aggregate` HOFs (JVM-native, no UDF). The LSH
+  * double by single-pass primitive-loop expressions (no UDF). The LSH
   * half implements random-hyperplane signatures whose hyperplanes are
   * generated driver-side from a fixed seed and embedded as array
   * literals — deterministic across runs and executors, no state to ship.
   */
 object VectorFunctions {
 
-  /** Double-precision dot product of two float-array columns. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
-
-  /** L2 norm. */
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity (NaN-free for zero vectors: yields NULL) — the
-    * `zip_with`+`aggregate` reference form; value-identical to the
-    * primitive-loop expression below (equivalence-tested).
-    */
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val n = norm(a) * norm(b)
-    when(n > 0, d / n)
-  }
-
-  /** Cosine similarity via the single-pass primitive-loop expression
-    * ([[FloatVecCosine]]) — same fold order and zero-norm semantics as
-    * [[cosineHof]], minus the interpreted per-element lambdas. This is
-    * the hot verify kernel of the candidate-pair pipelines.
+  /** Cosine similarity (NULL for a zero vector) via the single-pass
+    * primitive-loop expression ([[FloatVecCosine]]) — same fold order
+    * and zero-norm semantics as SimilaritySpec's `zip_with`+`aggregate`
+    * reference, minus the interpreted per-element lambdas. This is the
+    * hot verify kernel of the candidate-pair pipelines.
     */
   def cosine(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.shims.column(FloatVecCosine(
@@ -52,27 +32,13 @@ object VectorFunctions {
     Array.fill(n, dim)(rng.nextDouble() * 2 - 1)
   }
 
-  /** Projection sign bit of `v` against a literal hyperplane. */
-  private def signBit(v: Column, plane: Array[Double]): Column = {
-    val planeCol = array(plane.map(lit): _*)
-    when(dot(v, planeCol) >= 0, 1L).otherwise(0L)
-  }
-
-  /** Bucket key for one LSH table: `bits` projection signs packed into a
-    * long, offset by the table id so keys never collide across tables.
-    */
-  def lshBucket(v: Column, planes: Array[Array[Double]], table: Int): Column =
-    planes.foldLeft(lit(table.toLong)) { (acc, p) =>
-      shiftleft(acc, 1).bitwiseOR(signBit(v, p))
-    }
-
   /** All `tables` bucket keys for a vector as one array column; each
     * table uses its own `bitsPerTable` hyperplanes. A vector pair
     * colliding in ANY table becomes an ANN candidate:
     * P(candidate) = 1 - (1 - p^bits)^tables with p = 1 - θ/π.
     * Evaluated by the single-pass [[VectorExpressions.lshBuckets]]
-    * expression; [[lshBucketsHof]] is its value-identical Column-fold
-    * form, kept for equivalence testing.
+    * expression; SimilaritySpec checks it against a value-identical
+    * Column-fold form.
     */
   def lshBuckets(
       v: Column,
@@ -96,17 +62,4 @@ object VectorFunctions {
       seed: Long = 42L): Column =
     VectorExpressions.lshProbeBuckets(
       v, hyperplanes(tables * bitsPerTable, dim, seed), tables, bitsPerTable)
-
-  /** Column-fold reference form of [[lshBuckets]]. */
-  def lshBucketsHof(
-      v: Column,
-      dim: Int,
-      tables: Int,
-      bitsPerTable: Int,
-      seed: Long = 42L): Column = {
-    val all = hyperplanes(tables * bitsPerTable, dim, seed)
-    array((0 until tables).map { t =>
-      lshBucket(v, all.slice(t * bitsPerTable, (t + 1) * bitsPerTable), t)
-    }: _*)
-  }
 }

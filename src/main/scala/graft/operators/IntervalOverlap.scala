@@ -8,9 +8,21 @@ import org.apache.spark.sql.functions._
   *
   * Each interval fans out to the fixed-width bins it touches
   * (`sequence(s div W, (e−1) div W)`), candidates come from a plain
-  * equi-join on the bin, duplicates from multi-bin overlaps collapse
-  * with `distinct`, and the exact half-open predicate
+  * equi-join on the bin, and the exact half-open predicate
   * `max(s_a, s_b) < min(e_a, e_b)` prunes same-bin non-overlaps.
+  *
+  * FIRST-SHARED-BIN EMISSION: the join also requires
+  * `bin = max(s_a div W, s_b div W)`, so an overlapping pair that
+  * shares several bins meets in exactly one of them. No `distinct` is
+  * needed, and multiplicity is preserved: n identical input rows on one
+  * side give n identical output rows, as the brute-force join does.
+  * Truncating division is monotone for W > 0, so this holds for
+  * negative coordinates too.
+  *
+  * EMPTY INTERVALS: a row with e ≤ s overlaps nothing. Its bin range is
+  * clamped to the single bin `s div W`, and the exact predicate then
+  * drops it. Unclamped, `sequence` would count DOWN through every bin
+  * from `s div W` to `(e−1) div W`.
   *
   * SCALE CONTRACT: a naive overlap join is an inequality theta-join —
   * Spark plans it as a broadcast nested loop or cartesian, O(|A|·|B|).
@@ -30,15 +42,16 @@ object IntervalOverlap {
   /** `a`: (a_id, a_s, a_e) long µs columns; `b`: (b_id, b_s, b_e).
     * Returns (a_id, b_id, a_s, a_e, b_s, b_e, overlap_us > 0). */
   def pairs(a: DataFrame, b: DataFrame, binUs: Long): DataFrame = {
-    val av = a.select(col("a_id"), col("a_s"), col("a_e"),
-      explode(sequence(expr(s"a_s div $binUs"),
-        expr(s"(a_e - 1) div $binUs"))).as("bin"))
-    val bv = b.select(col("b_id"), col("b_s"), col("b_e"),
-      explode(sequence(expr(s"b_s div $binUs"),
-        expr(s"(b_e - 1) div $binUs"))).as("bin"))
-    av.join(bv, Seq("bin"))
+    def bins(s: String, e: String) = {
+      val first = expr(s"$s div $binUs")
+      explode(sequence(first, greatest(first, expr(s"($e - 1) div $binUs"))))
+        .as("bin")
+    }
+    val av = a.select(col("a_id"), col("a_s"), col("a_e"), bins("a_s", "a_e"))
+    val bv = b.select(col("b_id"), col("b_s"), col("b_e"), bins("b_s", "b_e"))
+    av.join(bv, av("bin") === bv("bin") &&
+        av("bin") === greatest(expr(s"a_s div $binUs"), expr(s"b_s div $binUs")))
       .select("a_id", "b_id", "a_s", "a_e", "b_s", "b_e")
-      .distinct()
       .withColumn("overlap_us",
         least(col("a_e"), col("b_e")) - greatest(col("a_s"), col("b_s")))
       .filter(col("overlap_us") > 0)

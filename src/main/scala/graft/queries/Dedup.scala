@@ -307,26 +307,6 @@ object Dedup extends QueryPack {
       .select("lang", "doc_a", "doc_b", "jaccard")
   }
 
-  /** HOF reference form of [[graft.functions.SimHashMd5]] — built only
-    * from `functions._` (md5/conv/aggregate), value-identical to the
-    * expression by DedupSpec's equivalence test. Kept as the executable
-    * specification; q57 runs the single-pass expression.
-    */
-  def simhashMd5Hof(toks: Column): Column = {
-    val hs = transform(toks,
-      tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long"))
-    aggregate(
-      sequence(lit(0), lit(31)),
-      lit(0L),
-      (acc, b) => {
-        val p = floor(pow(lit(2.0), b)).cast("long")
-        val vote = aggregate(hs, lit(0L),
-          (a, h) => a + (pmod(floor(h.cast("double") / p.cast("double"))
-            .cast("long"), lit(2L)) * 2 - 1))
-        acc + when(vote > 0, p).otherwise(lit(0L))
-      })
-  }
-
   def defs: Seq[QueryDef] = Seq(
     // ---- Exact dedup: canonical-form hash groupBy; keeps the minimum
     //      doc_id as the group representative ----

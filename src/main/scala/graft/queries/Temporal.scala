@@ -2406,10 +2406,12 @@ object Temporal extends QueryPack {
     // ---- q227: interval-overlap join — which user sessions overlap
     //      platform incident windows (≥2 errors in a 30-min bucket),
     //      and for how long? [[graft.operators.IntervalOverlap]] bins
-    //      both interval sets to 1-hour keys and equi-joins — the
-    //      inequality predicate never reaches the planner, so there is
-    //      no nested-loop/cartesian anywhere (plan-asserted in
-    //      IntervalOverlapSpec). The session id packs (user, seq) into
+    //      both interval sets to 1-hour keys and equi-joins each pair
+    //      in its first shared bin — the inequality predicate never
+    //      reaches the planner, so there is no nested-loop/cartesian
+    //      anywhere (plan-asserted in IntervalOverlapSpec), and no
+    //      Distinct: session and incident ids are unique, so each
+    //      overlapping pair is one row. The session id packs (user, seq) into
     //      one long (seq < 1e6 per user — a session per µs would be
     //      needed to break it). The incident-impact readout an SRE
     //      postmortem joins against. ----
@@ -4081,8 +4083,10 @@ object Temporal extends QueryPack {
     //      Scale shape: cumsums ride user-partitioned windows; the
     //      overlap join is user-keyed with at most nS + nD − 1 true
     //      matches per user (each pair advances one side's
-    //      frontier); for heavy keys the IntervalJoinRule binning
-    //      applies verbatim on the cum axis. ----
+    //      frontier). A heavy user's pair space could be split by
+    //      the first-shared-bin binning of
+    //      [[graft.operators.IntervalOverlap]] on the cum axis, with
+    //      the bin as a second join key; that is not built. ----
     QueryDef(
       "q347_fifo_allocation",
       (s, d) => {

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.xxhash64
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.functions.BloomSketchInternal
@@ -59,8 +58,4 @@ object BloomDedup {
       }
       .toDF("shard", "key_hash", "ts", "id")
   }
-
-  /** Column helper: 64-bit key hash for the input contract. */
-  def keyHash(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    xxhash64(c)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** F6 user-defined filter plugins + T5 multi-query fan-out.
@@ -11,8 +11,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * one Kafka-publishing streaming query per filter over a shared source
   * (ref: bin/ztf/distribute.py:46-50, 167-223). In Scala the registry is
   * explicit — `name → (DataFrame => Column)` — no reflection needed; the
-  * fan-out topology (independent checkpoints, awaitAnyTermination, timed
-  * shutdown) is preserved.
+  * fan-out topology (one query and checkpoint per filter) is preserved.
   */
 object FilterRegistry {
 
@@ -43,21 +42,4 @@ object FilterRegistry {
       val filtered = source.filter(f(source))
       sinkFor(filtered, name, s"$checkpointRoot/$name")
     }
-
-  /** Block until any fan-out query fails or `exitAfterSecs` elapses,
-    * then stop them politely (T6 timed shutdown, ref:
-    * bin/ztf/stream2raw.py:179-184).
-    */
-  def awaitAll(
-      spark: SparkSession,
-      queries: Seq[StreamingQuery],
-      exitAfterSecs: Option[Long] = None): Unit = {
-    exitAfterSecs match {
-      case Some(secs) =>
-        spark.streams.awaitAnyTermination(secs * 1000L)
-        queries.foreach(q => if (q.isActive) q.stop())
-      case None =>
-        spark.streams.awaitAnyTermination()
-    }
-  }
 }

@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.avro.AvroFunctions
+import graft.avro.{AvroFunctions, ToAvro}
 
 /** Streaming sinks (SURVEY §2.2) with the reference's checkpoint/
   * trigger topology: one checkpoint per sink, append mode, optional
@@ -50,15 +51,6 @@ object Sinks {
       .foreachBatch(f)
       .start()
 
-  /** K7: noop sink (materialize-only, test/bench). */
-  def noopSink(df: DataFrame, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery =
-    df.writeStream
-      .format("noop")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .start()
-
   /** K6: Complete-mode CSV workaround — file sinks can't run complete
     * mode, so each batch's full result overwrites one CSV (ref:
     * common/spark_utils.py:126-155 does driver-side to_csv; here it
@@ -97,12 +89,16 @@ object Sinks {
     * value = avro(struct(all columns)), key = the reader schema JSON,
     * partition = uniform random spread (ref: common/distribution_utils
     * .py:92-140). Pure transform, usable on static or streaming frames.
+    * Key and value both follow the schema of `df` as analyzed, so every
+    * payload decodes with its own key.
     */
   def kafkaPayload(df: DataFrame, nPartitions: Option[Int] = None): DataFrame = {
     val schemaJson = AvroFunctions.avroSchemaJson(df.schema)
+    val value = ToAvro(shims.expression(struct(df.columns.map(col): _*)),
+      Some(schemaJson))
     val base = df.select(
       lit(schemaJson).cast("binary").as("key"),
-      AvroFunctions.toAvro(struct(df.columns.map(col): _*)).as("value"))
+      shims.column(value).as("value"))
     nPartitions match {
       case Some(n) =>
         base.withColumn("partition", (rand(seed = 0) * n).cast("int"))

@@ -126,6 +126,37 @@ class AvroSpec extends SparkTestBase {
       df.collect().map(_.toString).sorted)
   }
 
+  /** Rows whose maps have eight keys each: a decoder that pairs keys
+    * and values out of order cannot return them unchanged. */
+  private lazy val wideMaps = {
+    val st = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("m", MapType(StringType, LongType))))
+    val keys = Seq("alpha", "bravo", "charlie", "delta", "echo",
+      "foxtrot", "golf", "hotel")
+    spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(1L, keys.zipWithIndex
+        .map { case (k, i) => k -> i.toLong }.toMap),
+      org.apache.spark.sql.Row(2L, keys.take(3)
+        .map(k => k -> k.length.toLong).toMap)), st)
+  }
+
+  private def maps(df: org.apache.spark.sql.DataFrame): Map[Long, Map[String, Long]] =
+    df.collect().map(r => r.getLong(0) -> r.getMap[String, Long](1).toMap).toMap
+
+  test("maps keep every key with its own value: to_avro → from_avro " +
+      "and container files") {
+    val json = AvroFunctions.avroSchemaJson(wideMaps.schema)
+    val back = wideMaps
+      .select(AvroFunctions.toAvro(struct(col("id"), col("m"))).as("v"))
+      .select(AvroFunctions.fromAvro(col("v"), json).as("d"))
+      .select("d.*")
+    assert(maps(back) === maps(wideMaps))
+    val dir = java.nio.file.Files.createTempDirectory("graft_avro_maps_").toString
+    AvroFiles.write(wideMaps, dir)
+    assert(maps(AvroFiles.read(spark, dir)) === maps(wideMaps))
+  }
+
   test("container files: distributed write then read preserves data (S4/K5)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_avro_").toString
     val df = alerts.repartition(3)

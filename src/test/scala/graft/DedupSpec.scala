@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.queries.Dedup
+import DedupSpec._
 
 /** Behavior of the dedup operators on a planted fixture: exact copies,
   * near-duplicates (one word changed), and unrelated docs.
@@ -205,7 +207,7 @@ class DedupSpec extends SparkTestBase {
     val toks = array_distinct(tokens(normText(col("text"))))
     val rows = fixture.select(
       graft.functions.HashFunctions.simhashMd5(toks).as("fast"),
-      Dedup.simhashMd5Hof(toks).as("ref")).collect()
+      simhashMd5Hof(toks).as("ref")).collect()
     rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
     assert(rows.nonEmpty)
   }
@@ -244,5 +246,68 @@ class DedupSpec extends SparkTestBase {
       .select(wordShingles(col("text"), 3).as("sh"))
       .collect()(0).getSeq[String](0)
     assert(n.isEmpty)
+  }
+}
+
+/** `functions._` reference forms of the single-pass hash expressions,
+  * value-identical by the equivalence tests above. */
+object DedupSpec {
+
+  /** HOF reference form of [[graft.functions.TextFunctions.wordShingles]].
+    * Guard: sequence(1, 0) DESCENDS in Spark, which would feed
+    * slice a zero start — short docs must yield an empty array instead.
+    */
+  def wordShinglesHof(c: Column, n: Int): Column = {
+    val toks = tokens(c)
+    when(
+      size(toks) >= n,
+      array_distinct(
+        transform(
+          sequence(lit(1), size(toks) - (n - 1)),
+          i => concat_ws(" ", slice(toks, i, lit(n))))))
+      .otherwise(array().cast("array<string>"))
+  }
+
+  /** Reference HOF form of [[graft.functions.TextFunctions.minhashSignature]] (k× slower: re-hashes
+    * the string per lane) — kept for equivalence testing.
+    */
+  def minhashSignatureHof(shingles: Column, k: Int): Column =
+    transform(
+      sequence(lit(0), lit(k - 1)),
+      i => array_min(transform(shingles, s => xxhash64(s, i))))
+
+  /** Reference HOF form of [[graft.functions.TextFunctions.simhash64]] (64 folds over the tokens) —
+    * kept for equivalence testing.
+    */
+  def simhash64Hof(toks: Column): Column = {
+    def tally(i: Int): Column =
+      aggregate(
+        toks,
+        lit(0),
+        (acc, t) =>
+          acc + when(shiftrightunsigned(xxhash64(t), i).bitwiseAND(1) === 1, 1)
+            .otherwise(-1))
+    (63 to 0 by -1).foldLeft(lit(0L)) { (acc, i) =>
+      shiftleft(acc, 1).bitwiseOR(when(tally(i) > 0, 1L).otherwise(0L))
+    }
+  }
+
+  /** HOF reference form of [[graft.functions.SimHashMd5]] — built only
+    * from `functions._` (md5/conv/aggregate). The executable
+    * specification; q57 runs the single-pass expression.
+    */
+  def simhashMd5Hof(toks: Column): Column = {
+    val hs = transform(toks,
+      tk => conv(substring(md5(tk), 1, 8), 16, 10).cast("long"))
+    aggregate(
+      sequence(lit(0), lit(31)),
+      lit(0L),
+      (acc, b) => {
+        val p = floor(pow(lit(2.0), b)).cast("long")
+        val vote = aggregate(hs, lit(0L),
+          (a, h) => a + (pmod(floor(h.cast("double") / p.cast("double"))
+            .cast("long"), lit(2L)) * 2 - 1))
+        acc + when(vote > 0, p).otherwise(lit(0L))
+      })
   }
 }

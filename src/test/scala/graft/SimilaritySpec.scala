@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables.t
 import graft.functions.VectorFunctions._
 import graft.queries.Similarity
+import SimilaritySpec._
 
 /** ANN quality: the LSH-bucketed top-k must recall ≥ 0.9 of the exact
   * brute-force top-k on the real sf0.001 embeddings, and the vector
@@ -179,7 +181,7 @@ class SimilaritySpec extends SparkTestBase {
     val df = rows.toDF("id", "a", "b")
       .select(
         VectorFunctions.cosine(col("a"), col("b")).as("fast"),
-        VectorFunctions.cosineHof(col("a"), col("b")).as("ref"))
+        cosineHof(col("a"), col("b")).as("ref"))
     df.collect().foreach { r =>
       assert(r.isNullAt(0) === r.isNullAt(1))
       if (!r.isNullAt(0)) {
@@ -201,7 +203,7 @@ class SimilaritySpec extends SparkTestBase {
       .toDF("a", "b")
       .select(
         VectorFunctions.cosine(col("a"), col("b")).as("fast"),
-        VectorFunctions.cosineHof(col("a"), col("b")).as("ref"))
+        cosineHof(col("a"), col("b")).as("ref"))
     df.collect().foreach { r =>
       assert(r.isNullAt(1), "HOF reference must be NULL here")
       assert(r.isNullAt(0), "native form must match the NULL")
@@ -288,5 +290,59 @@ class SimilaritySpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSet
     assert(dropped === again, "semantic dedup must be deterministic")
     corpus.unpersist()
+  }
+}
+
+/** `zip_with`/`aggregate` and Column-fold reference forms of the
+  * single-pass vector expressions, value-identical by the equivalence
+  * tests above. */
+object SimilaritySpec {
+
+  /** Double-precision dot product of two float-array columns. */
+  def dot(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0),
+      (acc, v) => acc + v)
+
+  /** L2 norm. */
+  def norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** Cosine similarity (NaN-free for zero vectors: yields NULL) — the
+    * `zip_with`+`aggregate` reference form; value-identical to the
+    * primitive-loop [[graft.functions.VectorFunctions.cosine]].
+    */
+  def cosineHof(a: Column, b: Column): Column = {
+    val d = dot(a, b)
+    val n = norm(a) * norm(b)
+    when(n > 0, d / n)
+  }
+
+  /** Projection sign bit of `v` against a literal hyperplane. */
+  private def signBit(v: Column, plane: Array[Double]): Column = {
+    val planeCol = array(plane.map(lit): _*)
+    when(dot(v, planeCol) >= 0, 1L).otherwise(0L)
+  }
+
+  /** Bucket key for one LSH table: `bits` projection signs packed into a
+    * long, offset by the table id so keys never collide across tables.
+    */
+  def lshBucket(v: Column, planes: Array[Array[Double]], table: Int): Column =
+    planes.foldLeft(lit(table.toLong)) { (acc, p) =>
+      shiftleft(acc, 1).bitwiseOR(signBit(v, p))
+    }
+
+  /** Column-fold reference form of
+    * [[graft.functions.VectorFunctions.lshBuckets]]. */
+  def lshBucketsHof(
+      v: Column,
+      dim: Int,
+      tables: Int,
+      bitsPerTable: Int,
+      seed: Long = 42L): Column = {
+    val all = hyperplanes(tables * bitsPerTable, dim, seed)
+    array((0 until tables).map { t =>
+      lshBucket(v, all.slice(t * bitsPerTable, (t + 1) * bitsPerTable), t)
+    }: _*)
   }
 }

@@ -154,6 +154,59 @@ class StreamingSpec extends SparkTestBase {
     assert(parts.forall(p => p >= 0 && p < 4))
   }
 
+  /** Alerts in parquet, so `classification` is a nullable column of a
+    * file scan. A filter on it narrows the column to non-nullable in the
+    * physical plan. */
+  private def writeClassifiedAlerts(): String = {
+    val dir = tmp("graft_payload_src_")
+    spark.range(30).select(
+        concat(lit("ZTF"), col("id").cast("string")).as("objectId"),
+        col("id").as("candid"),
+        when(col("id") % 3 === 0, lit(null).cast("string"))
+          .when(col("id") % 3 === 1, "variable_candidate")
+          .otherwise("transient_candidate").as("classification"))
+      .write.mode("overwrite").parquet(dir)
+    dir
+  }
+
+  private val variableIds = (0L until 30L).filter(_ % 3 == 1).toSet
+
+  /** Candids of payload rows, each decoded with the schema in its key. */
+  private def decodeWithOwnKey(rows: Array[org.apache.spark.sql.Row]): Seq[Long] =
+    rows.toSeq.map { r =>
+      val schema = new org.apache.avro.Schema.Parser()
+        .parse(new String(r.getAs[Array[Byte]]("key"), "UTF-8"))
+      val rec = new org.apache.avro.generic.GenericDatumReader[
+          org.apache.avro.generic.GenericRecord](schema)
+        .read(null, org.apache.avro.io.DecoderFactory.get()
+          .binaryDecoder(r.getAs[Array[Byte]]("value"), null))
+      assert(rec.get("classification").toString === "variable_candidate")
+      rec.get("candid").asInstanceOf[Long]
+    }
+
+  test("kafka payload after a filter on a nullable column decodes with its key") {
+    val alerts = spark.read.parquet(writeClassifiedAlerts())
+    val payload = Sinks.kafkaPayload(
+      alerts.filter(col("classification") === "variable_candidate"))
+    val got = decodeWithOwnKey(payload.collect())
+    assert(got.sorted === variableIds.toSeq.sorted)
+  }
+
+  test("streamed kafka payload after a filter on a nullable column decodes with its key") {
+    val dir = writeClassifiedAlerts()
+    val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
+      .parquet(dir)
+      .filter(col("classification") === "variable_candidate")
+    val q = Sinks.kafkaPayload(stream).writeStream
+      .format("memory").queryName("graft_filtered_payload")
+      .option("checkpointLocation", tmp("graft_payload_ckpt_"))
+      .trigger(Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination(60000) finally q.stop()
+    val got = decodeWithOwnKey(spark.table("graft_filtered_payload").collect())
+    assert(got.sorted === variableIds.toSeq.sorted)
+  }
+
   test("kafka source option surface (S1)") {
     val cfg = Sources.KafkaConfig(
       servers = "broker:9092",

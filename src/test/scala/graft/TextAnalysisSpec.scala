@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
+import TextAnalysisSpec.langIdHof
 
 /** Language-ID and quality-metric behavior on crafted fixtures (the
   * synthetic corpus is language-less, so semantics are proven here).
@@ -93,5 +95,34 @@ class TextAnalysisSpec extends SparkTestBase {
     val sh = Seq("a b c d").toDF("t")
       .select(wordShingles(col("t"), 3)).collect()(0).getSeq[String](0)
     assert(sh.toSet === Set("a b c", "b c d"))
+  }
+}
+
+object TextAnalysisSpec {
+
+  /** Reference HOF form of [[graft.functions.TextFunctions.langId]] — kept for equivalence testing. */
+  def langIdHof(c: Column): Column = {
+    // let-binding via singleton-array transform: a naive expression tree
+    // here re-embeds the tokenizer in every when-branch (each branch
+    // references `best`, which references all five intersects, which each
+    // reference the token set — ~30 tokenizer copies that CaseWhen keeps
+    // out of subexpression elimination). Binding the token set, then the
+    // score struct, as single-element transform scopes evaluates the
+    // tokenize once and each marker intersect once per row.
+    val marks = langMarkers.toSeq.sortBy(_._1)
+    val toksOnce = array(array_distinct(tokens(lower(c))))
+    val scoresOnce = transform(toksOnce, tk =>
+      struct(marks.map { case (lang, words) =>
+        size(array_intersect(tk, array(words.map(lit): _*))).as(s"s_$lang")
+      }: _*))
+    element_at(
+      transform(scoresOnce, sc => {
+        val scores = marks.map { case (lang, _) => lang -> sc.getField(s"s_$lang") }
+        val best = greatest(scores.map(_._2): _*)
+        scores.foldRight(lit("und")) { case ((lang, s), el) =>
+          when(s === best && best > 0, lit(lang)).otherwise(el)
+        }
+      }),
+      1)
   }
 }
