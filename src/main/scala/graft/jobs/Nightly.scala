@@ -65,10 +65,6 @@ object Nightly {
       scienceLake, checkpoint, trigger,
       partitionCols = Seq("year", "month", "day"))
 
-  /** distribute: per-filter fan-out of Kafka-framed payloads. The
-    * `sinkFor` seam lets tests swap the Kafka writer for memory sinks;
-    * production passes Sinks.kafkaSink.
-    */
   /** The distribution wire frame (ref: bin/ztf/distribute.py:76-109):
     * broker timestamps cast to string, the three cutout structs and the
     * candidate struct RE-PACKED (kept — it is the archive ingest that
@@ -87,6 +83,10 @@ object Nightly {
     science.selectExpr(exprs: _*)
   }
 
+  /** distribute: per-filter fan-out of Kafka-framed payloads. The
+    * `sinkFor` seam lets tests swap the Kafka writer for memory sinks;
+    * production passes Sinks.kafkaSink.
+    */
   def distribute(
       spark: SparkSession,
       scienceLake: String,

@@ -17,7 +17,17 @@ object Sinks {
     if (processingTimeSecs <= 0) Trigger.ProcessingTime(0L)
     else Trigger.ProcessingTime(processingTimeSecs * 1000L)
 
-  /** K1: parquet append sink with checkpoint + optional y/m/d layout. */
+  /** K1: parquet append sink with checkpoint + optional y/m/d layout.
+    *
+    * Layout contract: with `partitionCols`, each micro-batch writes one
+    * file per partition value (for the lakes, one file per night). The
+    * batch is hash-repartitioned by those columns, so all rows of a value
+    * reach one write task. The cost is one shuffle per batch, and a batch
+    * inside one night is written by one task either way, so it gains no
+    * file-count reduction. It pays because every downstream reader pays
+    * per file and per column, and the fan-out reads the science lake once
+    * per filter.
+    */
   def parquetSink(
       df: DataFrame,
       path: String,
@@ -25,7 +35,9 @@ object Sinks {
       trigger: Trigger = Trigger.ProcessingTime(0L),
       partitionCols: Seq[String] = Nil,
       queryName: Option[String] = None): StreamingQuery = {
-    var w = df.writeStream
+    val clustered =
+      if (partitionCols.isEmpty) df else df.repartition(partitionCols.map(col): _*)
+    var w = clustered.writeStream
       .outputMode("append")
       .format("parquet")
       .option("path", path)

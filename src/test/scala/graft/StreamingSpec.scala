@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -19,37 +20,84 @@ class StreamingSpec extends SparkTestBase {
   private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
   test("file-stream → parquet sink is exactly-once across restart (S2/K1/T3)") {
+    // Run once into an unpartitioned sink, and once into the lakes' y/m/d
+    // layout over input written as 4 files that each span every night.
+    val nights = Seq("year", "month", "day")
+    def plain(n: Int, seed: Long) = AlertSchema.fixture(spark, n, seed = seed)
+    def dated(n: Int, seed: Long) = AlertFunctions.withDatePartitions(
+      AlertSchema.fixture(spark, n, seed = seed),
+      AlertFunctions.jdToTimestamp(col("candidate.jd"))).repartition(4)
+    // the fixture puts 100 alerts in each night: 300 span 3, 150 span 2
+    exactlyOnceAcrossRestart(Nil, plain(40, 42L), plain(25, 7L))
+    exactlyOnceAcrossRestart(nights, dated(300, 42L), dated(150, 7L))
+  }
+
+  /** Parquet files under each leaf partition directory of `out`. */
+  private def filesPerLeaf(out: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(out)
+    Files.walk(root).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .groupBy(p => root.relativize(p.getParent).toString)
+      .map { case (dir, files) => dir -> files.size }
+  }
+
+  private def exactlyOnceAcrossRestart(
+      partitionCols: Seq[String],
+      first: DataFrame,
+      delta: DataFrame): Unit = {
     val in = tmp("graft_in_")
     val out = tmp("graft_out_")
     val ckpt = tmp("graft_ckpt_")
-    AlertSchema.fixture(spark, 40).write.mode("append").parquet(in)
+    first.write.mode("append").parquet(in)
 
     def runOnce(): Unit = {
       val stream = Sources.fileStream(spark, in)
       val q = Sinks.parquetSink(
         AlertFunctions.qualityCuts(stream),
-        out, ckpt, Trigger.AvailableNow())
+        out, ckpt, Trigger.AvailableNow(), partitionCols = partitionCols)
       q.awaitTermination(120000)
       ()
     }
+    // each leaf directory a batch's rows reach gains exactly one file
+    def leaves(df: DataFrame): Set[String] =
+      AlertFunctions.qualityCuts(df).select(partitionCols.map(col): _*)
+        .distinct().collect()
+        .map(r => partitionCols.zipWithIndex.map { case (c, i) => s"$c=${r.get(i)}" }
+          .mkString("/")).toSet
+    def oneFilePerLeaf(before: Map[String, Int], batch: DataFrame): Unit =
+      if (partitionCols.nonEmpty) {
+        val after = filesPerLeaf(out)
+        val touched = leaves(batch)
+        assert(touched.size >= 2, s"the batch must span several nights: $touched")
+        (after.keySet ++ before.keySet).foreach { dir =>
+          val gained = after.getOrElse(dir, 0) - before.getOrElse(dir, 0)
+          assert(gained === (if (touched(dir)) 1 else 0),
+            s"$dir gained $gained files in one batch (before $before, after $after)")
+        }
+      }
+
     runOnce()
+    oneFilePerLeaf(Map.empty, first)
     val firstCount = spark.read.parquet(out).count()
-    val expectFirst = AlertFunctions.qualityCuts(
-      AlertSchema.fixture(spark, 40)).count()
+    val expectFirst = AlertFunctions.qualityCuts(first).count()
     assert(firstCount === expectFirst)
 
     // restart with MORE data: only the delta may be appended
-    AlertSchema.fixture(spark, 25, seed = 7L).write.mode("append").parquet(in)
+    delta.write.mode("append").parquet(in)
+    val beforeDelta = filesPerLeaf(out)
     runOnce()
+    oneFilePerLeaf(beforeDelta, delta)
     val secondCount = spark.read.parquet(out).count()
-    val expectDelta = AlertFunctions.qualityCuts(
-      AlertSchema.fixture(spark, 25, seed = 7L)).count()
+    val expectDelta = AlertFunctions.qualityCuts(delta).count()
     assert(secondCount === expectFirst + expectDelta,
       "checkpoint restart must process exactly the new files")
 
     // third run with nothing new: no duplicates
+    val beforeIdle = filesPerLeaf(out)
     runOnce()
     assert(spark.read.parquet(out).count() === secondCount)
+    assert(filesPerLeaf(out) === beforeIdle)
   }
 
   test("probeSchema waits then reads the lake schema; fails after retries") {
