@@ -11,29 +11,27 @@ import org.apache.spark.sql.functions._
   */
 object AlertFunctions {
 
-  /** X1 `concat_col`: full history of a per-detection field = history
-    * array values + the current detection's value appended. NULL history
-    * (no prior detections) degrades to the 1-element array, matching the
+  /** X1 `concat_col`, for many fields in one projection (the reference
+    * builds ~11 of these per batch): the full history of a per-detection
+    * field = history array values + the current detection's value
+    * appended, as column `prefix + field`. NULL history (no prior
+    * detections) degrades to the 1-element array, matching the
     * reference's null-tolerant concat (ref: ztf/science.py:236-255 via
     * fink_utils concat_col).
     */
-  def concatCol(
+  def concatCols(
       df: DataFrame,
-      field: String,
+      fields: Seq[String],
       current: String = "candidate",
       history: String = "prv_candidates",
       prefix: String = "c"): DataFrame = {
-    val hist = coalesce(
-      col(s"$history.$field"),
-      array().cast(df.select(col(s"$history.$field")).schema.head.dataType))
-    df.withColumn(prefix + field, concat(hist, array(col(s"$current.$field"))))
+    val hist = fields.map(f => col(s"$history.$f"))
+    // one schema probe types every field's empty-history default
+    val types = df.select(hist: _*).schema.map(_.dataType)
+    df.select(col("*") +: fields.zip(hist).zip(types).map { case ((f, h), t) =>
+      concat(coalesce(h, array().cast(t)), array(col(s"$current.$f"))).as(prefix + f)
+    }: _*)
   }
-
-  /** Apply concatCol for many fields at once (the reference builds ~11
-    * of these per batch).
-    */
-  def concatCols(df: DataFrame, fields: Seq[String]): DataFrame =
-    fields.foldLeft(df)((d, f) => concatCol(d, f))
 
   /** X11: Julian date → timestamp. Pure arithmetic — JD epoch offset to
     * Unix epoch is 2440587.5 days (public almanac constant); no
@@ -64,21 +62,11 @@ object AlertFunctions {
   def locusCut(distnr: Column, magDiff: Column, offset: Double = 0.2): Column =
     magDiff > log10(distnr) + lit(offset)
 
-  /** X6-style classification recode: a deterministic score + label from
-    * magnitude history (stands in for the ML scorers — the engine
+  /** X6-style classification recode: a label from a score and the
+    * history length (stands in for the ML classifiers — the engine
     * contract is column-in/column-out; ref --noscience precedent at
     * bin/ztf/raw2science.py:97-104).
     */
-  def deterministicScore(cmagpsf: Column): Column = {
-    // history arrays carry NULL entries for upper limits (non-detections);
-    // mask them BEFORE folding — acc + NULL would null the whole sum (the
-    // reference rfscore drops NaN history the same way)
-    val valid = filter(cmagpsf, x => x.isNotNull)
-    val n = size(valid)
-    val mean = aggregate(valid, lit(0.0), (acc, x) => acc + x.cast("double")) / n
-    when(n > 0, (lit(22.0) - mean) / lit(22.0)).otherwise(lit(0.0))
-  }
-
   def classify(score: Column, nHistory: Column): Column =
     when(score >= 0.5 && nHistory >= 2, "transient_candidate")
       .when(score >= 0.25, "variable_candidate")

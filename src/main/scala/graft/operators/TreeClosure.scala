@@ -16,6 +16,13 @@ import org.apache.spark.sql.functions._
   * doubles per iteration and the driver dies on plan strings long
   * before data pressure.
   *
+  * Failure contract: a local checkpoint lives only in executor block
+  * storage with its lineage cut, so losing an executor after a round
+  * fails the next job that reads that round instead of recomputing it
+  * (with the lazy `localCheckpoint(false)` that job is the next round's
+  * count, one job later than the eager form would fail), and the caller
+  * reruns the whole closure.
+  *
   * Output: (node, anc) — one row per proper ancestor of each node.
   * Cycles would never terminate; callers own acyclicity (a DAG/tree
   * contract, the same one SQL's WITH RECURSIVE has).

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -63,7 +64,7 @@ class AlertPipelineSpec extends SparkTestBase {
     val scored = {
       val c = AlertFunctions.concatCols(
         AlertFunctions.qualityCuts(alerts), Seq("magpsf", "jd"))
-        .withColumn("score", AlertFunctions.deterministicScore(col("cmagpsf")))
+        .withColumn("score", AlertPipelineSpec.deterministicScore(col("cmagpsf")))
       AlertFunctions.withDatePartitions(
         c.withColumn("class",
           AlertFunctions.classify(col("score"), size(col("cmagpsf")) - 1)),
@@ -131,5 +132,22 @@ class AlertPipelineSpec extends SparkTestBase {
     assert(compacted.rdd.getNumPartitions < 24)
     val tiny = alerts.coalesce(1)
     assert(Compaction.compact(tiny).rdd.getNumPartitions === 1)
+  }
+}
+
+object AlertPipelineSpec {
+
+  /** A deterministic score from the magnitude history (stands in for the
+    * ML scorers, ref --noscience precedent at bin/ztf/raw2science.py:
+    * 97-104). History arrays carry NULL entries for upper limits
+    * (non-detections); they are masked BEFORE folding — acc + NULL would
+    * null the whole sum (the reference rfscore drops NaN history the same
+    * way).
+    */
+  def deterministicScore(cmagpsf: Column): Column = {
+    val valid = filter(cmagpsf, x => x.isNotNull)
+    val n = size(valid)
+    val mean = aggregate(valid, lit(0.0), (acc, x) => acc + x.cast("double")) / n
+    when(n > 0, (lit(22.0) - mean) / lit(22.0)).otherwise(lit(0.0))
   }
 }

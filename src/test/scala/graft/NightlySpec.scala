@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.alerts.AlertSchema
 import graft.avro.AvroFunctions
+import graft.core.PlanAudit
 import graft.jobs.Nightly
 import graft.streaming.FilterRegistry
 
@@ -100,8 +101,8 @@ class NightlySpec extends SparkTestBase {
   }
 
   test("enrichment plan is narrow: no shuffle in the science stage") {
-    val enriched = Nightly.enrich(AlertSchema.fixture(spark, 50))
-    val plan = enriched.queryExecution.executedPlan.toString()
-    assert(!plan.contains("Exchange"), s"science stage must not shuffle:\n$plan")
+    val audit = PlanAudit.summarize(Nightly.enrich(AlertSchema.fixture(spark, 50)))
+    assert(audit.shuffleExchanges === 0, s"science stage must not shuffle: $audit")
+    assert(audit.broadcastExchanges === 0, s"science stage must not broadcast: $audit")
   }
 }
