@@ -63,6 +63,22 @@ object Sinks {
       .foreachBatch(f)
       .start()
 
+  /** Idempotent side-effect write for a [[foreachBatchSink]] callback:
+    * `rows` land in the `batch_id=<batchId>` partition of the parquet
+    * table at `path`, replacing whatever that partition held. A
+    * foreachBatch callback is at-least-once (a failure between the write
+    * and the checkpoint commit replays the batch), so a plain append
+    * would write a replayed batch twice; the dynamic partition overwrite
+    * rewrites only this batch's partition and leaves the others alone.
+    * Read back, `batch_id` is inferred as int; cast it to long.
+    */
+  def writeBatchPartition(rows: DataFrame, batchId: Long, path: String): Unit =
+    rows.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(path)
+
   /** K6: Complete-mode CSV workaround — file sinks can't run complete
     * mode, so each batch's full result overwrites one CSV (ref:
     * common/spark_utils.py:126-155 does driver-side to_csv; here it
@@ -82,20 +98,6 @@ object Sinks {
           .option("header", "true").csv(path)
       }
       .start()
-
-  /** Streaming dedup with bounded state (T7 headroom: the reference
-    * runs no stateful operators; this is the watermarked form the
-    * rebuild offers when at-least-once upstream delivery needs
-    * de-duplication): duplicates of `keys` within the watermark horizon
-    * are dropped, state for expired event times is reclaimed.
-    */
-  def dedupStream(
-      df: DataFrame,
-      keys: Seq[String],
-      eventTimeCol: String,
-      watermark: String): DataFrame =
-    df.withWatermark(eventTimeCol, watermark)
-      .dropDuplicates(keys :+ eventTimeCol)
 
   /** K2 payload shape: the Kafka message frame the reference publishes —
     * value = avro(struct(all columns)), key = the reader schema JSON,

@@ -7,10 +7,9 @@ import org.apache.spark.sql.types.StructType
 /** Streaming sources (SURVEY §2.1).
   *
   * S2 file streams mirror the reference's connect-to-lake semantics
-  * (ref: common/spark_utils.py:311-368): an explicit schema — probed
-  * from the static lake when absent — plus a bounded retry-wait for the
-  * directory to appear (the raw lake materializes only when the night's
-  * first batch lands).
+  * (ref: common/spark_utils.py:311-368): the schema is probed from the
+  * static lake after a bounded retry-wait for the directory to appear
+  * (the raw lake materializes only when the night's first batch lands).
   *
   * S1 Kafka is a config builder: the option surface (subscribe pattern,
   * offsets, rate limit, data-loss tolerance, SASL) is the contract the
@@ -19,23 +18,13 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  /** S2: parquet directory as a stream. */
-  def fileStream(
-      spark: SparkSession,
-      path: String,
-      schema: Option[StructType] = None,
-      latestFirst: Boolean = false,
-      maxFilesPerTrigger: Option[Int] = None,
-      waitRetries: Int = 6,
-      waitMillis: Long = 5000L): DataFrame = {
-    val resolved = schema.getOrElse(probeSchema(spark, path, waitRetries, waitMillis))
-    var reader = spark.readStream
-      .schema(resolved)
-      .option("latestFirst", latestFirst.toString)
+  /** S2: parquet directory as a stream, its schema probed from the
+    * static lake with [[probeSchema]]'s default wait. */
+  def fileStream(spark: SparkSession, path: String): DataFrame =
+    spark.readStream
+      .schema(probeSchema(spark, path))
       .option("basePath", path)
-    maxFilesPerTrigger.foreach(m => reader = reader.option("maxFilesPerTrigger", m))
-    reader.parquet(path)
-  }
+      .parquet(path)
 
   /** Schema of the static lake at `path`, waiting for it to exist. */
   def probeSchema(

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Custom streaming state via `mapGroupsWithState` (headroom beyond the
-  * reference's stateless spine, SURVEY §2.13 T7): per-key accumulators
-  * that survive across micro-batches through the state store, with
-  * optional processing-time expiry to bound state size.
+/** The stateful streaming operators (headroom beyond the reference's
+  * stateless spine, SURVEY §2.13 T7): a per-key running count kept in
+  * the state store by `mapGroupsWithState`, and the one streaming dedup,
+  * which [[CurationStream]] applies to document fingerprints.
   */
 object Stateful {
 
@@ -32,30 +32,6 @@ object Stateful {
   /** Output mode stateful ops require. */
   val RequiredOutputMode: OutputMode = OutputMode.Update()
 
-  /** Watermarked tumbling/sliding event-time window aggregation: counts
-    * per (key, window), late rows beyond `watermark` dropped by the
-    * engine. With `slide == width` the windows tumble; a smaller slide
-    * overlaps them (each event lands in width/slide windows). Append
-    * mode emits each window once, when the watermark passes its end —
-    * the exactly-once aggregate the brief's streaming contract names.
-    */
-  def windowedCounts(
-      df: DataFrame,
-      eventTimeCol: String,
-      key: String,
-      width: String,
-      slide: String,
-      watermark: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit, window}
-    df.withWatermark(eventTimeCol, watermark)
-      .groupBy(window(col(eventTimeCol), width, slide), col(key))
-      .agg(count(lit(1)).as("n"))
-      .select(
-        col("window.start").as("w_start"),
-        col("window.end").as("w_end"),
-        col(key), col("n"))
-  }
-
   /** Streaming exact dedup — the continuous-ingestion form of the
     * batch exact-dedup operator (queries/Dedup q20): keep the first
     * row per key, dropping re-deliveries. With
@@ -79,25 +55,4 @@ object Stateful {
       case None =>
         df.dropDuplicates(keyCols)
     }
-
-  /** Session windows by inactivity gap: the streaming counterpart of
-    * the batch gap-sessionization operator (operators/Sessionize) —
-    * state is one open session per key, closed and emitted once the
-    * watermark passes `gap` past its last event.
-    */
-  def sessionCounts(
-      df: DataFrame,
-      eventTimeCol: String,
-      key: String,
-      gap: String,
-      watermark: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit, session_window}
-    df.withWatermark(eventTimeCol, watermark)
-      .groupBy(session_window(col(eventTimeCol), gap), col(key))
-      .agg(count(lit(1)).as("n"))
-      .select(
-        col("session_window.start").as("s_start"),
-        col("session_window.end").as("s_end"),
-        col(key), col("n"))
-  }
 }

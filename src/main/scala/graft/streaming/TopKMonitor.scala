@@ -18,22 +18,20 @@ import graft.functions.MisraGries
   * Σ_b N_b/(k+1) = N_total/(k+1) holds over the whole stream and the
   * cross-batch state is one k-entry map however long the stream runs.
   *
-  * Snapshot writes are IDEMPOTENT per batch: foreachBatch alone is
-  * only at-least-once for side effects (a failure between the write
-  * and the checkpoint commit replays the batch), so each snapshot is
-  * written as a dynamic overwrite of its own `batch_id=` partition —
-  * a replayed batch rewrites that partition instead of appending
-  * duplicate rows. The running summary itself lives on the driver:
-  * after a restart it resumes EMPTY (monitoring-grade semantics —
-  * the history stays queryable in the metrics table, and the last
-  * snapshot row set is the warm-start if a caller wants to reload
-  * it; a replayed partition therefore reflects the post-restart
-  * summary, which is the honest state).
+  * Snapshot writes are IDEMPOTENT per batch
+  * ([[Sinks.writeBatchPartition]]): a replayed batch rewrites its own
+  * `batch_id=` partition instead of appending duplicate rows. The
+  * running summary itself lives on the driver: after a restart it
+  * resumes EMPTY (monitoring-grade semantics — the history stays
+  * queryable in the metrics table, and the last snapshot row set is
+  * the warm-start if a caller wants to reload it; a replayed partition
+  * therefore reflects the post-restart summary, which is the honest
+  * state).
   */
 object TopKMonitor {
 
   /** Attach to a streaming DataFrame; `keyCol` must be string-typed.
-    * Each micro-batch appends (batch_id, item, lb_count, rank) rows —
+    * Each micro-batch writes (item, lb_count, rank, batch_id) rows —
     * the RUNNING (not per-batch) heavy-hitter view, counts being
     * lower bounds within N_total/(k+1) of truth. */
   def start(
@@ -53,19 +51,12 @@ object TopKMonitor {
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       running = mg.merge(running, batchSummary)
       val snap = mg.finish(running).zipWithIndex.map {
-        case ((item, lb), i) => (id, item, lb, (i + 1).toLong)
+        case ((item, lb), i) => (item, lb, (i + 1).toLong)
       }
       val spark = batch.sparkSession
       import spark.implicits._
-      // dynamic partition overwrite keyed by batch_id: replaces only
-      // THIS batch's partition, so checkpoint-replayed batches can't
-      // duplicate rows (idempotent side effect under at-least-once
-      // foreachBatch delivery)
-      snap.toDF("batch_id", "item", "lb_count", "rank")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(metricsPath)
+      Sinks.writeBatchPartition(
+        snap.toDF("item", "lb_count", "rank"), id, metricsPath)
     }
   }
 }

@@ -59,8 +59,7 @@ class NewQueryPlanSpec extends SparkTestBase {
     val df = SparkEntry.queries("q88_curation_pipeline")(spark, sf)
     // the dedup window's input must be the skinny projection — text is
     // reduced to (n_tokens, fp, redacted) BEFORE the fp-keyed exchange,
-    // so the shuffle carries fingerprints, never documents (the same
-    // ids-only discipline as CorpusCuration's dedup)
+    // so the shuffle carries fingerprints, never documents
     val wins = df.queryExecution.optimizedPlan.collect { case w: LWindow => w }
     assert(wins.nonEmpty, "dedup window missing from the plan")
     wins.foreach { w =>

@@ -2,13 +2,17 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.streaming.QualityMonitor
+import graft.streaming.{QualityMonitor, TopKMonitor}
 
 /** Streaming data-quality monitor: per-micro-batch rule metrics land
-  * in the metrics table with exact counts, and the batch evaluator is
-  * a single aggregate pass however many rules are attached.
+  * in the metrics table with exact counts, the batch evaluator is a
+  * single aggregate pass however many rules are attached, and a
+  * replayed batch (both monitors) replaces its rows rather than adding
+  * a second copy.
   */
 class QualityMonitorSpec extends SparkTestBase {
   import spark.implicits._
@@ -78,5 +82,70 @@ class QualityMonitorSpec extends SparkTestBase {
     val b2 = all.filter(col("rule") === "v_nonneg")
       .agg(sum(col("n_violations"))).collect()(0).getLong(0)
     assert(b2 === 4L, "batch-2 negatives (i=1..4) must be flagged")
+  }
+
+  /** Runs `start` over two micro-batches, deletes the checkpoint's last
+    * commit and restarts it, so Spark replays batch 1. Returns the
+    * metrics table with `batch_id` read back as long.
+    */
+  private def replayLastBatch(
+      schema: String,
+      batches: Seq[DataFrame])(
+      start: (DataFrame, String, String) => StreamingQuery): DataFrame = {
+    val src = Files.createTempDirectory("replay_src_").toString
+    val metrics = Files.createTempDirectory("replay_met_").toString
+    val ckpt = Files.createTempDirectory("replay_ck_").toString
+    batches.foreach(_.coalesce(1).write.mode("append").parquet(src))
+    def run(): StreamingQuery = {
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+      val q = start(stream, metrics, ckpt)
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+    run()
+    val commit = new java.io.File(ckpt, "commits/1")
+    assert(commit.delete(), s"no commit to drop: $commit")
+    new java.io.File(ckpt, "commits/.1.crc").delete()
+    val replay = run()
+    val replayed = replay.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+    assert(replayed.toSeq === Seq(1L), "the restart must replay exactly batch 1")
+    spark.read.parquet(metrics)
+      .withColumn("batch_id", col("batch_id").cast("long"))
+  }
+
+  test("a replayed monitor batch replaces its rows instead of adding a second copy") {
+    val quality = replayLastBatch("id bigint, v bigint", Seq(
+        (0 until 20).map(i => (i.toLong, i.toLong)).toDF("id", "v"),
+        (0 until 5).map(i => (i.toLong, -i.toLong)).toDF("id", "v"))) {
+      (stream, metrics, ckpt) => QualityMonitor.start(stream, rules, metrics, ckpt)
+    }
+    val m = quality.collect()
+      .map(r => (r.getAs[Long]("batch_id"), r.getAs[String]("rule")) ->
+        (r.getAs[Long]("n_checked"), r.getAs[Long]("n_violations")))
+    assert(m.length === 6, s"one row set per (batch_id, rule): ${m.toSeq}")
+    assert(m.toMap === Map(
+      (0L, "v_nonneg") -> (20L, 0L), (0L, "v_small") -> (20L, 0L),
+      (0L, "id_odd") -> (20L, 10L),
+      (1L, "v_nonneg") -> (5L, 4L), (1L, "v_small") -> (5L, 0L),
+      (1L, "id_odd") -> (5L, 3L)))
+
+    val topk = replayLastBatch("k string", Seq(
+        (Seq.fill(30)("hot") ++ (0 until 10).map(i => s"u$i")).toDF("k"),
+        (Seq.fill(20)("warm") ++ Seq.fill(5)("hot")).toDF("k"))) {
+      (stream, metrics, ckpt) => TopKMonitor.start(stream, "k", 4, metrics, ckpt)
+    }
+    val snaps = topk.collect()
+      .map(r => (r.getAs[Long]("batch_id"), r.getAs[String]("item"),
+        r.getAs[Long]("rank")))
+    assert(snaps.map(_._1).toSet === Set(0L, 1L))
+    assert(snaps.groupBy(_._1).values.forall { s =>
+      s.length <= 4 && s.map(_._2).distinct.length == s.length &&
+        s.map(_._3).sorted.toSeq == (1L to s.length.toLong)
+    }, s"one snapshot per batch_id: ${snaps.toSeq}")
+    // the running summary restarts empty, so the replayed snapshot is
+    // batch 1 alone, where "warm" leads
+    assert(snaps.filter(s => s._1 == 1L && s._3 == 1L).map(_._2).toSeq ===
+      Seq("warm"))
   }
 }

@@ -1,15 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.Tables.t
-import graft.streaming.Sinks
 
-/** Approximate-sketch error bounds vs exact answers, and watermarked
-  * streaming dedup.
-  */
+/** Approximate-sketch error bounds vs exact answers. */
 class SketchSpec extends SparkTestBase {
 
   test("q41 sketches stay within their error bounds vs exact") {
@@ -52,25 +47,5 @@ class SketchSpec extends SparkTestBase {
     // every key above the guarantee threshold survives
     exact.filter(_._2 > slack).keys
       .foreach(u => assert(summary.contains(u), s"heavy $u evicted"))
-  }
-
-  test("streaming dedup drops duplicates within the watermark horizon") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def ts(s: Int) = new java.sql.Timestamp(base.getTime + s * 1000L)
-    val src = MemoryStream[(Long, java.sql.Timestamp)]
-    src.addData((1L, ts(0)), (1L, ts(0)), (2L, ts(5)), (1L, ts(0)), (3L, ts(9)))
-    val deduped = Sinks.dedupStream(
-      src.toDF().toDF("candid", "event_time"),
-      keys = Seq("candid"), eventTimeCol = "event_time",
-      watermark = "10 minutes")
-    val q = deduped.writeStream.format("memory").queryName("dedup_stream")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_dd_").toString)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val ids = spark.table("dedup_stream").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq === Seq(1L, 2L, 3L))
   }
 }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.Stateful
 
-/** mapGroupsWithState: per-key state must accumulate ACROSS
-  * micro-batches (the state store carries it), not reset per batch.
+/** Stateful streaming: per-key state must accumulate ACROSS
+  * micro-batches (the state store carries it), not reset per batch, and
+  * the streaming dedup keeps one row per key within its watermark.
   */
 class StatefulSpec extends SparkTestBase {
 
@@ -74,81 +75,6 @@ class StatefulSpec extends SparkTestBase {
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
-  test("watermarked tumbling window: aggregates emit on close, late data dropped") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[(java.sql.Timestamp, String)]
-    val out = Stateful.windowedCounts(
-      src.toDF().toDF("ts", "k"), "ts", "k",
-      width = "10 minutes", slide = "10 minutes", watermark = "5 minutes")
-    val q = out.writeStream
-      .format("memory").queryName("win_counts")
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_win_").toString)
-      .start()
-    try {
-      src.addData(
-        (ts("2026-01-01 00:01:00"), "a"),
-        (ts("2026-01-01 00:02:00"), "a"),
-        (ts("2026-01-01 00:03:00"), "b"))
-      q.processAllAvailable()
-      // advance the watermark beyond 00:10 + 5min so the window closes
-      src.addData((ts("2026-01-01 00:21:00"), "a"))
-      q.processAllAvailable()
-      // a LATE row for the closed window: must be dropped, not revived
-      src.addData((ts("2026-01-01 00:04:00"), "a"))
-      q.processAllAvailable()
-      src.addData((ts("2026-01-01 00:40:00"), "z"))
-      q.processAllAvailable()
-      val rows = spark.table("win_counts").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getString(2), r.getLong(3)))
-        .toSet
-      assert(rows.contains(("2026-01-01 00:00:00.0", "a", 2L)),
-        s"window [00:00,00:10) for a should have closed with 2, got $rows")
-      assert(rows.contains(("2026-01-01 00:00:00.0", "b", 1L)))
-      // the late 00:04 row must NOT have produced a second emission
-      assert(rows.count(_._2 == "a") <= 2, s"late row revived a window: $rows")
-    } finally q.stop()
-  }
-
-  test("session windows close after the inactivity gap") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[(java.sql.Timestamp, String)]
-    val out = Stateful.sessionCounts(
-      src.toDF().toDF("ts", "k"), "ts", "k",
-      gap = "5 minutes", watermark = "1 minute")
-    val q = out.writeStream
-      .format("memory").queryName("sess_counts")
-      .outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_sess_").toString)
-      .start()
-    try {
-      // two bursts 20 minutes apart: two sessions for key a
-      src.addData(
-        (ts("2026-01-01 00:00:00"), "a"),
-        (ts("2026-01-01 00:02:00"), "a"),
-        (ts("2026-01-01 00:20:00"), "a"))
-      q.processAllAvailable()
-      src.addData((ts("2026-01-01 01:00:00"), "a")) // advances watermark
-      q.processAllAvailable()
-      src.addData((ts("2026-01-01 02:00:00"), "z"))
-      q.processAllAvailable()
-      val sessions = spark.table("sess_counts").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getTimestamp(1).toString,
-          r.getString(2), r.getLong(3)))
-        .filter(_._3 == "a").toSet
-      // burst 1: 00:00-00:02 + 5min gap → closes at 00:07, n=2
-      assert(sessions.exists(s => s._1 == "2026-01-01 00:00:00.0"
-        && s._2 == "2026-01-01 00:07:00.0" && s._4 == 2L), sessions.toString)
-      // burst 2: single event at 00:20 → closes at 00:25, n=1
-      assert(sessions.exists(s => s._1 == "2026-01-01 00:20:00.0"
-        && s._4 == 1L), sessions.toString)
-    } finally q.stop()
-  }
-
   test("streaming dedup drops re-deliveries across batches; state expires past watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -182,6 +108,16 @@ class StatefulSpec extends SparkTestBase {
       val all = spark.table("dedup_stream").collect().map(_.getString(1))
       assert(all.count(_ == "a") === 2,
         s"expired key must re-emit (bounded state): ${all.toSeq}")
+      // exact duplicate rows inside ONE batch, interleaved with other
+      // keys, keep one row per key
+      src.addData(
+        (ts("2026-01-01 02:00:00"), "d"), (ts("2026-01-01 02:00:00"), "d"),
+        (ts("2026-01-01 02:00:05"), "e"), (ts("2026-01-01 02:00:00"), "d"),
+        (ts("2026-01-01 02:00:09"), "f"))
+      q.processAllAvailable()
+      val last = spark.table("dedup_stream").collect().map(_.getString(1))
+        .filter(Set("d", "e", "f")).sorted
+      assert(last.toSeq === Seq("d", "e", "f"), s"in-batch duplicates: ${last.toSeq}")
     } finally q.stop()
   }
 }
