@@ -3,11 +3,8 @@ package graft
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
-import graft.functions.BpeApply
-
-/** ScalaCheck laws for the pure kernels added in round 9: the
-  * interval-stabbing depth used by the layout audits, and BPE
-  * train/apply losslessness on arbitrary vocabularies.
+/** ScalaCheck law for the interval-stabbing depth used by the layout
+  * audits.
   */
 object LayoutBpeProperties extends Properties("layout-bpe") {
 
@@ -37,31 +34,4 @@ object LayoutBpeProperties extends Properties("layout-bpe") {
   property("sweepEqualsBruteForceStabbing") = forAll(intervalsGen) { iv =>
     sweepDepth(iv) == bruteDepth(iv)
   }
-
-  // ---- BPE: lossless + bounded on arbitrary vocabularies ----
-
-  private val wordGen = Gen.chooseNum(1, 8)
-    .flatMap(n => Gen.listOfN(n, Gen.alphaLowerChar).map(_.mkString))
-  private val vocabGen = Gen.mapOf(
-    wordGen.flatMap(w => Gen.chooseNum(1L, 9L).map(w -> _)))
-
-  property("encodeIsLossless") = forAll(vocabGen, wordGen) { (vocab, w) =>
-    val ranks = BpeApply.learnMerges(vocab, 12).zipWithIndex.toMap
-    BpeApply.encodeWord(w, ranks).mkString == w
-  }
-
-  property("encodeNeverExpands") = forAll(vocabGen, wordGen) { (vocab, w) =>
-    val ranks = BpeApply.learnMerges(vocab, 12).zipWithIndex.toMap
-    val e = BpeApply.encodeWord(w, ranks)
-    e.length <= w.length && (w.isEmpty || e.nonEmpty)
-  }
-
-  property("trainedWordsFullyCompressWithEnoughMerges") =
-    forAll(Gen.resize(4, vocabGen.suchThat(_.nonEmpty))) { vocab =>
-      // enough merges to cover every adjacent pair in the vocabulary
-      // (iterator: mapping the key SET would collapse equal budgets)
-      val budget = vocab.keysIterator.map(w => math.max(0, w.length - 1)).sum
-      val ranks = BpeApply.learnMerges(vocab, budget).zipWithIndex.toMap
-      vocab.keys.forall(w => BpeApply.encodeWord(w, ranks).length == 1)
-    }
 }

@@ -33,8 +33,7 @@ class ReachabilitySpec extends AnyFunSuite {
     "PlanAudit" -> "instrument: the typed plan pins the specs assert with",
     "QualityMonitor" -> "monitor kept for the spine's in-flight telemetry (ROADMAP.md)",
     "TopKMonitor" -> "monitor kept for the spine's in-flight telemetry (ROADMAP.md)",
-    "RangeLayout" -> "spec-only; keep or delete is open in ROADMAP.md",
-    "BpeApply" -> "spec-only; keep or delete is open in ROADMAP.md")
+    "RangeLayout" -> "reference feature: time-range lake layout (bin/ztf/merge.py:62-91, layout Y1)")
 
   private val mainRoot = Paths.get("src", "main", "scala")
 
