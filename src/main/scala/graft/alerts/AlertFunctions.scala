@@ -40,10 +40,6 @@ object AlertFunctions {
   def jdToTimestamp(jd: Column): Column =
     timestamp_micros(((jd - lit(2440587.5)) * lit(86400000000.0)).cast("long"))
 
-  /** Timestamp → Julian date (inverse of [[jdToTimestamp]]). */
-  def timestampToJd(ts: Column): Column =
-    unix_micros(ts).cast("double") / lit(86400000000.0) + lit(2440587.5)
-
   /** F1 quality cuts (ref: bin/ztf/raw2science.py:92-95): clean
     * detections only — no bad pixels, real-bogus above threshold, and a
     * physical filter band.

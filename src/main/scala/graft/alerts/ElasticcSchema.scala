@@ -1,6 +1,6 @@
 package graft.alerts
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -57,30 +57,6 @@ object ElasticcSchema {
     StructField("classifierParams", StringType),
     StructField("classId", IntegerType),
     StructField("probability", FloatType)))
-
-  /** Deterministic ELAsTICC-shaped science batch. */
-  def fixture(spark: SparkSession, n: Int, seed: Long = 909L): DataFrame = {
-    import scala.collection.JavaConverters._
-    import org.apache.spark.sql.Row
-    val rng = new scala.util.Random(seed)
-    val rows = (0 until n).map { i =>
-      Row(
-        3000000L + i,
-        Row(
-          4000000L + i,
-          60500.0 + i.toDouble / 40.0,
-          rng.nextDouble() * 360.0,
-          math.toDegrees(math.asin(rng.nextDouble() * 2 - 1)),
-          (rng.nextDouble() * 1000).toFloat,
-          (5 + rng.nextDouble() * 50).toFloat,
-          "ugrizy".charAt(rng.nextInt(6)).toString),
-        1700000000000L + i * 1000L,
-        rng.nextDouble(),
-        rng.nextDouble(),
-        rng.nextDouble())
-    }
-    spark.createDataFrame(rows.asJava, alertSchema())
-  }
 
   /** MJD → epoch milliseconds (the reference's convert_to_millitime). */
   def mjdToMillis(mjd: Column): Column =

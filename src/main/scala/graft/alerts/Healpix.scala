@@ -24,17 +24,6 @@ object Healpix {
     x
   }
 
-  /** Compress even bit positions of v into the low bits. */
-  private def compressBits(v: Long): Int = {
-    var x = v & 0x5555555555555555L
-    x = (x | (x >> 1)) & 0x3333333333333333L
-    x = (x | (x >> 2)) & 0x0f0f0f0f0f0f0f0fL
-    x = (x | (x >> 4)) & 0x00ff00ff00ff00ffL
-    x = (x | (x >> 8)) & 0x0000ffff0000ffffL
-    x = (x | (x >> 16)) & 0x00000000ffffffffL
-    x.toInt
-  }
-
   /** Nested pixel index of (ra, dec) in degrees at the given nside. */
   def ang2pixNest(nside: Int, raDeg: Double, decDeg: Double): Long = {
     require(nside > 0 && (nside & (nside - 1)) == 0, s"nside must be 2^k: $nside")
@@ -77,45 +66,5 @@ object Healpix {
     }
     face.toLong * nside.toLong * nside.toLong +
       (spreadBits(ix.toInt) | (spreadBits(iy.toInt) << 1))
-  }
-
-  // ring index of the southernmost corner of each face, in nside units
-  private val jrll = Array(2, 2, 2, 2, 3, 3, 3, 3, 4, 4, 4, 4)
-  // phi index offset of each face, in π/(4·nr) units
-  private val jpll = Array(1, 3, 5, 7, 0, 2, 4, 6, 1, 3, 5, 7)
-
-  /** Center (ra, dec) in degrees of a nested pixel — the inverse map,
-    * used for round-trip verification and pixel→cone queries.
-    */
-  def pix2angNest(nside: Int, pix: Long): (Double, Double) = {
-    val npface = nside.toLong * nside.toLong
-    val face = (pix / npface).toInt
-    val within = pix % npface
-    val ix = compressBits(within)
-    val iy = compressBits(within >> 1)
-    val jr = jrll(face).toLong * nside - ix - iy - 1 // ring index
-    var z = 0.0
-    var kshift = 0L
-    var nr = 0L
-    if (jr < nside) { // north polar cap
-      nr = jr
-      z = 1.0 - (nr * nr).toDouble / (3.0 * nside * nside)
-      kshift = 0
-    } else if (jr > 3L * nside) { // south polar cap
-      nr = 4L * nside - jr
-      z = -1.0 + (nr * nr).toDouble / (3.0 * nside * nside)
-      kshift = 0
-    } else { // equatorial belt
-      nr = nside
-      z = (2L * nside - jr) * 2.0 / (3.0 * nside)
-      kshift = (jr - nside) & 1
-    }
-    var jp = (jpll(face) * nr + ix - iy + 1 + kshift) / 2
-    if (jp > 4 * nr) jp -= 4 * nr
-    if (jp < 1) jp += 4 * nr
-    val phi = (jp - (kshift + 1) * 0.5) * (math.Pi / (2.0 * nr))
-    val ra = math.toDegrees(phi)
-    val dec = math.toDegrees(math.asin(z))
-    (ra, dec)
   }
 }

@@ -1,6 +1,5 @@
 package graft.alerts
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** The second survey: Rubin/LSST-shaped alerts (§1.3 multi-survey
@@ -38,7 +37,7 @@ object RubinSchema {
   /** Numeric (major, minor) version order: "10.0" > "7.1", which the
     * lexicographic string compare gets backwards.
     */
-  private[alerts] def versionAtLeast(version: String, floor: String): Boolean = {
+  private[graft] def versionAtLeast(version: String, floor: String): Boolean = {
     def parts(v: String): Array[Int] =
       v.split("\\.").map(p => p.takeWhile(_.isDigit)).map(p =>
         if (p.isEmpty) 0 else p.toInt).padTo(2, 0)
@@ -59,46 +58,5 @@ object RubinSchema {
         StructField("psfFlux", FloatType),
         StructField("psfFluxErr", FloatType))))),
       StructField("diaObject", diaObjectType)))
-  }
-
-  /** Deterministic Rubin-shaped batch at schema `version`. */
-  def fixture(
-      spark: SparkSession,
-      n: Int,
-      version: String = "7.1",
-      seed: Long = 4242L): DataFrame = {
-    import scala.collection.JavaConverters._
-    import org.apache.spark.sql.Row
-    val withRel = versionAtLeast(version, "7.1")
-    val rng = new scala.util.Random(seed)
-    def src(id: Long, mjd: Double): Row = {
-      val base = Seq[Any](
-        id,
-        mjd,
-        rng.nextDouble() * 360.0,
-        math.toDegrees(math.asin(rng.nextDouble() * 2 - 1)),
-        (rng.nextDouble() * 2000).toFloat,
-        (10 + rng.nextDouble() * 100).toFloat,
-        "ugrizy".charAt(rng.nextInt(6)).toString)
-      Row.fromSeq(if (withRel) base :+ rng.nextDouble().toFloat else base)
-    }
-    def forced(id: Long, mjd: Double): Row =
-      Row(id, mjd, (rng.nextDouble() * 500).toFloat,
-        (5 + rng.nextDouble() * 50).toFloat)
-    val rows = (0 until n).map { i =>
-      val objId = 9000000L + i % math.max(n / 3, 1)
-      val mjd = 60800.0 + i.toDouble / 50.0
-      val nPrv = rng.nextInt(4)
-      Row(
-        5000000L + i,
-        src(7000000L + i, mjd),
-        (1 to nPrv).map(h => src(7000000L + i - h * 1000L, mjd - h * 0.07)),
-        (1 to rng.nextInt(3)).map(h =>
-          forced(8000000L + i - h * 1000L, mjd - h * 0.05)),
-        Row(objId, rng.nextDouble() * 360.0,
-          math.toDegrees(math.asin(rng.nextDouble() * 2 - 1)),
-          1 + nPrv))
-    }
-    spark.createDataFrame(rows.asJava, alertSchema(version))
   }
 }

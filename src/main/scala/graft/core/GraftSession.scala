@@ -71,42 +71,4 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-
-  /** Cluster deployment profile: the conf set this engine expects on a
-    * real multi-executor cluster (the master/deploy-mode/resource flags
-    * come from spark-submit). Everything here scales with cluster size,
-    * not data size:
-    *
-    *  - shuffle.partitions ≈ 2-3× total executor cores (AQE coalesces
-    *    down per-stage, so over-partitioning is the safe side; the
-    *    skew-join split handles hot keys without manual salting);
-    *  - 128 MB scan partitions bound per-task memory no matter how many
-    *    files a 100 TB table has;
-    *  - broadcast threshold stays conservative — deliberate broadcasts
-    *    in this codebase are explicit `broadcast()` hints, so a
-    *    mis-estimated dimension can't OOM the executors;
-    *  - Kryo + registrationRequired=false: tracklet/science case
-    *    classes serialize compactly without a hand-kept registry.
-    */
-  def clusterConf(totalCores: Int): Map[String, String] = Map(
-    "spark.sql.shuffle.partitions" -> (totalCores * 3).toString,
-    "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-    "spark.sql.adaptive.skewJoin.enabled" -> "true",
-    "spark.sql.autoBroadcastJoinThreshold" -> (32L * 1024 * 1024).toString,
-    "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
-    "spark.sql.parquet.compression.codec" -> "zstd",
-    "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
-
-  /** Builder for a cluster session: [[configure]] semantics plus the
-    * [[clusterConf]] scale settings. */
-  def cluster(appName: String, totalCores: Int): SparkSession.Builder = {
-    val b = SparkSession.builder().appName(appName)
-    clusterConf(totalCores).foldLeft(
-      configure(b, shufflePartitions = totalCores * 3)) {
-      case (bb, (k, v)) => bb.config(k, v)
-    }
-  }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Hilbert space-filling-curve keys for multi-dimensional data layout.
   *
-  * The Z-order key ([[graft.operators.RangeLayout]]) is the cheap
+  * The Z-order key (`Validation.morton`, q133) is the cheap
   * bit-interleave; the Hilbert curve is the strictly-better-locality
   * variant (every consecutive pair of curve positions is an ADJACENT
   * cell — no Z-shape jumps), which is why large table formats offer it
@@ -18,9 +18,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * inside whole-stage codegen.
   *
   * Algorithm: the standard rotate-and-accumulate walk over the square
-  * of side 2^order (public domain; the form below is the widely
-  * published C `xy2d`/`d2xy` pair, e.g. Hamilton's tech report
-  * CS-2006-07 and the Wikipedia "Hilbert curve" article). At each
+  * of side 2^order (public domain; the form below is the `xy2d` half
+  * of the widely published C `xy2d`/`d2xy` pair, e.g. Hamilton's tech
+  * report CS-2006-07 and the Wikipedia "Hilbert curve" article). At each
   * scale s = 2^(order-1)..1 the quadrant index (3·rx)⊕ry contributes
   * s²·quadrant to the distance, then the frame is flipped/transposed
   * so the child quadrant sees canonical orientation.
@@ -51,31 +51,6 @@ object HilbertCurve {
       s >>= 1
     }
     d
-  }
-
-  /** Inverse walk: curve distance → (x, y). Spec-level witness that
-    * [[xy2d]] is a bijection on the grid. */
-  def d2xy(order: Int, d0: Long): (Long, Long) = {
-    var x = 0L
-    var y = 0L
-    var t = d0
-    var s = 1L
-    while (s < (1L << order)) {
-      val rx = 1L & (t / 2)
-      val ry = 1L & (t ^ rx)
-      if (ry == 0) {
-        if (rx == 1) {
-          x = s - 1 - x
-          y = s - 1 - y
-        }
-        val tmp = x; x = y; y = tmp
-      }
-      x += s * rx
-      y += s * ry
-      t /= 4
-      s *= 2
-    }
-    (x, y)
   }
 
   /** Column form: `hilbert(x, y, order)` over long columns. */

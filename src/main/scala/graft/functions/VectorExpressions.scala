@@ -6,21 +6,19 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Float-vector × literal-matrix product as one expression.
+/** Cosine similarities of a float vector against a literal matrix as one
+  * expression.
   *
   * The LSH/IVF stages need `rows` dot products per input vector; as
   * `zip_with`+`aggregate` HOFs that is rows×dim interpreted lambda
   * steps with boxing. Here the matrix rides along as a plan literal and
   * the kernel is two tight loops over primitive arrays — same sequential
-  * fold order as the HOF form, so results are identical.
-  *
-  * `cosine = true` divides each dot by ‖v‖·‖row‖ (row norms
-  * precomputed at plan build).
+  * fold order as the HOF form, so results are identical. Each dot is
+  * divided by ‖v‖·‖row‖ (row norms precomputed at plan build).
   */
 case class FloatVecMatMul(
     child: Expression,
-    matrix: Array[Array[Double]],
-    cosine: Boolean)
+    matrix: Array[Array[Double]])
     extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
@@ -35,11 +33,11 @@ case class FloatVecMatMul(
   def kernel(v: ArrayData): ArrayData = {
     val dim = math.min(v.numElements(), matrix(0).length)
     val out = new Array[Double](matrix.length)
-    var vn = 0.0
-    if (cosine) {
+    val vn = {
+      var sq = 0.0
       var i = 0
-      while (i < dim) { val x = v.getFloat(i).toDouble; vn += x * x; i += 1 }
-      vn = math.sqrt(vn)
+      while (i < dim) { val x = v.getFloat(i).toDouble; sq += x * x; i += 1 }
+      math.sqrt(sq)
     }
     var r = 0
     while (r < matrix.length) {
@@ -48,8 +46,7 @@ case class FloatVecMatMul(
       var i = 0
       while (i < dim) { acc += v.getFloat(i).toDouble * row(i); i += 1 }
       out(r) =
-        if (!cosine) acc
-        else if (vn > 0 && rowNorms(r) > 0) acc / (vn * rowNorms(r))
+        if (vn > 0 && rowNorms(r) > 0) acc / (vn * rowNorms(r))
         else 0.0
       r += 1
     }
@@ -271,15 +268,10 @@ object VectorExpressions {
     shims.column(HyperplaneLshBuckets(
       shims.expression(v), planes, tables, bitsPerTable, multiprobe = true))
 
-
-  /** Dot products of a float-array column against literal rows. */
-  def project(v: Column, rows: Array[Array[Double]]): Column =
-    shims.column(FloatVecMatMul(shims.expression(v), rows, cosine = false))
-
   /** Cosine similarities of a float-array column against literal rows
     * (rows given as float vectors, e.g. sampled centroids).
     */
   def cosineTo(v: Column, rows: Array[Array[Float]]): Column =
     shims.column(FloatVecMatMul(
-      shims.expression(v), rows.map(_.map(_.toDouble)), cosine = true))
+      shims.expression(v), rows.map(_.map(_.toDouble))))
 }

@@ -1,34 +1,15 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-
-/** Multimodal column handling (SURVEY §7.5): image/audio/video as
-  * opaque `binary` columns with typed metadata structs, processed by
-  * batch decoders behind a narrow seam.
+/** The media codecs behind the Media query pack (queries/Media.scala,
+  * SURVEY §7.5): images and audio travel as opaque `binary` columns and
+  * are decoded inside per-row kernels.
   *
-  * Four formats are decoded FOR REAL — PPM (P6), PGM (P5), BMP (24bpp
-  * uncompressed) and WAV (RIFF/PCM16) are pure byte math, no codec
-  * library needed: header parse, row-padding/bottom-up normalization,
-  * BGR→RGB swizzle, grayscale expansion, RIFF chunk walk, and a real
-  * nearest-neighbor resize ([[decodePpm]]/[[decodePgm]]/[[decodeBmp]]/
-  * [[decodeWav]]/[[resizeRgb]], golden-tested in MultimodalSpec).
-  * JPEG and PNG are ALSO decoded for real via the JDK's own
-  * `javax.imageio.ImageIO` ([[decodeImageIO]]) — probed present in
-  * this container's JRE, no external dependency — with magic-number
-  * sniffing so arbitrary binary never reaches the codec. Only video
-  * (MP4) remains a STUB — a deterministic byte-level fake so every
-  * piece of Spark plumbing (schema, batch shape, partitioning, null
-  * handling, feature extraction contract) is real and tested. A
-  * production deployment swaps the stub arm of
-  * [[decodeKernel]]/[[frameKernel]] for JNI/javacpp video codecs;
-  * nothing else changes.
-  *
-  * Scale notes: decode is the expensive stage, so [[withDecodeParallelism]]
-  * repartitions FIRST (ref Y3 precedent: repartition before costly
-  * UDFs, bin/ztf/compute_ephemerides.py:77); media payloads stay in
-  * executor memory one batch at a time — never collected.
+  * WAV (RIFF/PCM16) is pure byte math: a RIFF chunk walk and
+  * little-endian samples ([[decodeWav]]/[[encodeWav]]). PNG, JPEG and GIF
+  * go through the JDK's own `javax.imageio.ImageIO` ([[decodeImageIO]]/
+  * [[encodePng]]), with magic-number sniffing so arbitrary binary never
+  * reaches the codec. q158, q159 and q326 hash-match DuckDB oracles
+  * through these codecs, and MultimodalSpec pins their golden pixels.
   */
 object Multimodal {
 
@@ -55,146 +36,11 @@ object Multimodal {
   // engine.
   javax.imageio.ImageIO.setUseCache(false)
 
-  /** Typed metadata carried next to every media payload. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType),
-    StructField("bytes", LongType)))
-
-  // ---------------------------------------------------------------
-  // REAL KERNELS — codec-free formats decoded by pure byte math.
-  // ---------------------------------------------------------------
-
-  /** REAL PPM (P6) decode: "P6" magic, whitespace/#-comment-tolerant
-    * ASCII header (width height maxval), single whitespace, then
-    * w*h RGB byte triplets. Returns None on malformed/truncated input.
-    */
-  private[graft] def decodePpm(data: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (data == null || data.length < 2 || data(0) != 'P' || data(1) != '6')
-      return None
-    var i = 2
-    def skipWs(): Unit = {
-      var go = true
-      while (go && i < data.length) {
-        val c = data(i)
-        if (c == '#') { while (i < data.length && data(i) != '\n') i += 1 }
-        else if (c == ' ' || c == '\t' || c == '\n' || c == '\r') i += 1
-        else go = false
-      }
-    }
-    def readInt(): Int = {
-      skipWs()
-      var v = 0; var any = false
-      while (i < data.length && data(i) >= '0' && data(i) <= '9') {
-        v = v * 10 + (data(i) - '0'); i += 1; any = true
-      }
-      if (any) v else -1
-    }
-    val w = readInt(); val h = readInt(); val maxv = readInt()
-    // 16-bit-per-channel PPMs (maxval > 255) are out of scope
-    if (w <= 0 || h <= 0 || maxv <= 0 || maxv > 255) return None
-    i += 1 // exactly one whitespace byte separates maxval from pixels
-    // Long arithmetic: a malformed header declaring huge dims must
-    // not Int-overflow the size check into a spurious pass
-    val needL = w.toLong * h * 3
-    if (i < 0 || needL > Int.MaxValue || data.length - i < needL) None
-    else {
-      val need = needL.toInt
-      Some((w, h, java.util.Arrays.copyOfRange(data, i, i + need)))
-    }
-  }
-
-  /** REAL PGM (P5) decode: same ASCII header discipline as P6 but one
-    * gray byte per pixel, expanded to RGB triplets (r=g=b) so every
-    * downstream consumer (resize, features) sees one pixel format. */
-  private[graft] def decodePgm(data: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (data == null || data.length < 2 || data(0) != 'P' || data(1) != '5')
-      return None
-    var i = 2
-    def skipWs(): Unit = {
-      var go = true
-      while (go && i < data.length) {
-        val c = data(i)
-        if (c == '#') { while (i < data.length && data(i) != '\n') i += 1 }
-        else if (c == ' ' || c == '\t' || c == '\n' || c == '\r') i += 1
-        else go = false
-      }
-    }
-    def readInt(): Int = {
-      skipWs()
-      var v = 0; var any = false
-      while (i < data.length && data(i) >= '0' && data(i) <= '9') {
-        v = v * 10 + (data(i) - '0'); i += 1; any = true
-      }
-      if (any) v else -1
-    }
-    val w = readInt(); val h = readInt(); val maxv = readInt()
-    if (w <= 0 || h <= 0 || maxv <= 0 || maxv > 255) return None
-    i += 1
-    // Long arithmetic: 46341x46341 would Int-overflow w*h and sneak
-    // past the payload-length guard into a negative allocation
-    if (i < 0 || w.toLong * h * 3 > Int.MaxValue ||
-      data.length - i < w.toLong * h) return None
-    val out = new Array[Byte](w * h * 3)
-    var p = 0
-    while (p < w * h) {
-      val g = data(i + p)
-      out(3 * p) = g; out(3 * p + 1) = g; out(3 * p + 2) = g
-      p += 1
-    }
-    Some((w, h, out))
-  }
-
-  /** REAL BMP decode: 24bpp uncompressed BITMAPINFOHEADER files.
-    * Handles the 4-byte row padding, bottom-up (positive height) vs
-    * top-down (negative height) row order, and the BGR→RGB swizzle.
-    * Output is top-down RGB triplets. None on anything else (other
-    * depths/compressions need real codec tables).
-    */
-  private[multimodal] def decodeBmp(data: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (data == null || data.length < 54 || data(0) != 'B' || data(1) != 'M')
-      return None
-    val bb = java.nio.ByteBuffer.wrap(data)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val off = bb.getInt(10)
-    val dibSize = bb.getInt(14)
-    if (dibSize < 40) return None
-    val w = bb.getInt(18); val hRaw = bb.getInt(22)
-    val planes = bb.getShort(26); val bpp = bb.getShort(28)
-    val compression = bb.getInt(30)
-    if (w <= 0 || hRaw == 0 || planes != 1 || bpp != 24 || compression != 0)
-      return None
-    val h = math.abs(hRaw); val topDown = hRaw < 0
-    // Long arithmetic end-to-end: declared dims near Int.MaxValue must
-    // fail the bounds check, not wrap into a negative allocation
-    val rowSizeL = ((w.toLong * 3 + 3) / 4) * 4
-    if (off < 14 + dibSize || w.toLong * h * 3 > Int.MaxValue ||
-      off.toLong + rowSizeL * h > data.length)
-      return None
-    val rowSize = rowSizeL.toInt
-    val out = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      val srcRow = if (topDown) y else h - 1 - y
-      var x = 0
-      while (x < w) {
-        val s = off + srcRow * rowSize + x * 3
-        val d = (y * w + x) * 3
-        out(d) = data(s + 2); out(d + 1) = data(s + 1); out(d + 2) = data(s)
-        x += 1
-      }
-      y += 1
-    }
-    Some((w, h, out))
-  }
-
   /** REAL WAV decode — pure byte math, no codec library: RIFF header
     * sniff, chunk walk to `fmt ` (PCM format 1, 16-bit only) and
     * `data`, little-endian PCM16 samples. Returns (sampleRate,
     * channels, interleaved samples). Malformed/compressed payloads →
-    * None (the stub seam keeps handling those).
+    * None.
     */
   private[graft] def decodeWav(
       data: Array[Byte]): Option[(Int, Int, Array[Short])] = {
@@ -263,8 +109,8 @@ object Multimodal {
   /** REAL JPEG/PNG/GIF decode via the JDK's `javax.imageio.ImageIO` —
     * ships in every JRE, so no external codec dependency. Payloads
     * are magic-sniffed (JPEG FFD8, PNG 89'PNG', GIF 'GIF8') before
-    * the codec ever sees them; output is top-down RGB triplets like
-    * every other image decoder here. JPEG being lossy, pixel values
+    * the codec ever sees them; output is top-down RGB triplets. JPEG
+    * being lossy, pixel values
     * are codec-defined — tests assert dimensions and per-pixel
     * tolerance on round trips, exact bytes for PNG and for GIF whose
     * palette the source colors fit (both lossless). None on
@@ -318,300 +164,5 @@ object Multimodal {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     bos.toByteArray
-  }
-
-  /** Encode top-down RGB triplets as JPEG via ImageIO (fixture side
-    * of the lossy round-trip test). */
-  private[graft] def encodeJpeg(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val argb = new Array[Int](w * h)
-    var i = 0
-    while (i < argb.length) {
-      argb(i) = ((rgb(3 * i) & 0xff) << 16) |
-        ((rgb(3 * i + 1) & 0xff) << 8) | (rgb(3 * i + 2) & 0xff)
-      i += 1
-    }
-    img.setRGB(0, 0, w, h, argb, 0, w)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpeg", bos)
-    bos.toByteArray
-  }
-
-  /** Encode top-down RGB triplets as GIF via ImageIO (fixture side of
-    * the palette-lossless round-trip test). The JDK's GIF writer
-    * QUANTIZES direct-color images to its own palette — handing it a
-    * TYPE_INT_RGB frame loses colors even when ≤256 are present — so
-    * the image is built as TYPE_BYTE_INDEXED over an explicit
-    * IndexColorModel holding exactly the distinct source colors
-    * (≤256 required), which the writer emits verbatim. */
-  private[graft] def encodeGif(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
-    val n = w * h
-    val argb = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      argb(i) = ((rgb(3 * i) & 0xff) << 16) |
-        ((rgb(3 * i + 1) & 0xff) << 8) | (rgb(3 * i + 2) & 0xff)
-      i += 1
-    }
-    val palette = argb.distinct
-    require(palette.length <= 256,
-      s"GIF fixture needs <=256 distinct colors, got ${palette.length}")
-    val idx = palette.zipWithIndex.toMap
-    val cm = new java.awt.image.IndexColorModel(
-      8, palette.length,
-      palette.map(v => ((v >> 16) & 0xff).toByte),
-      palette.map(v => ((v >> 8) & 0xff).toByte),
-      palette.map(v => (v & 0xff).toByte))
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
-    val raster = img.getRaster
-    i = 0
-    while (i < n) {
-      raster.setSample(i % w, i / w, 0, idx(argb(i)))
-      i += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "gif", bos)
-    bos.toByteArray
-  }
-
-  /** REAL nearest-neighbor resize over top-down RGB triplets. */
-  private[multimodal] def resizeRgb(
-      w0: Int, h0: Int, rgb: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val out = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      val sy = y * h0 / h
-      var x = 0
-      while (x < w) {
-        val sx = x * w0 / w
-        val s = (sy * w0 + sx) * 3
-        val d = (y * w + x) * 3
-        out(d) = rgb(s); out(d + 1) = rgb(s + 1); out(d + 2) = rgb(s + 2)
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  /** Minimal P6 re-encode (maxval 255) — the canonical output form for
-    * real-format transforms. */
-  private[multimodal] def encodePpm(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
-    val hdr = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
-    val out = new Array[Byte](hdr.length + rgb.length)
-    System.arraycopy(hdr, 0, out, 0, hdr.length)
-    System.arraycopy(rgb, 0, out, hdr.length, rgb.length)
-    out
-  }
-
-  // ---------------------------------------------------------------
-  // STUB KERNELS — deterministic byte-level fakes standing in for real
-  // codecs (no image/audio libraries in this container).
-  // ---------------------------------------------------------------
-
-  /** Decode: REAL for PPM/BMP (magic-sniffed); STUB 12-byte fake
-    * header (fmt byte, w, h, frames) for everything else — a real
-    * kernel would parse JPEG/PNG/WAV there.
-    */
-  private[graft] def decodeKernel(data: Array[Byte]): (String, Int, Int, Int) = {
-    decodePpm(data) match {
-      case Some((w, h, _)) => return ("ppm", w, h, 1)
-      case None =>
-    }
-    decodePgm(data) match {
-      case Some((w, h, _)) => return ("pgm", w, h, 1)
-      case None =>
-    }
-    decodeBmp(data) match {
-      case Some((w, h, _)) => return ("bmp", w, h, 1)
-      case None =>
-    }
-    decodeWav(data) match {
-      // audio reuses the meta shape: w = sample rate, h = channels,
-      // frames = whole seconds of audio (duration at the meta grain)
-      case Some((rate, ch, samples)) =>
-        return ("wav", rate, ch, math.max(1, samples.length / (rate * ch)))
-      case None =>
-    }
-    decodeImageIO(data) match {
-      case Some((fmt, w, h, _)) => return (fmt, w, h, 1)
-      case None =>
-    }
-    if (data == null || data.length < 12 ||
-      (data(0) == 'P' && (data(1) == '6' || data(1) == '5')) ||
-      (data(0) == 'B' && data(1) == 'M') ||
-      (data(0) == 'R' && data(1) == 'I' && data(2) == 'F' && data(3) == 'F') ||
-      ((data(0) & 0xff) == 0xff && (data(1) & 0xff) == 0xd8) ||
-      ((data(0) & 0xff) == 0x89 && data(1) == 'P' && data(2) == 'N' &&
-        data(3) == 'G'))
-      ("unknown", 0, 0, 0) // malformed real-format payloads stay unknown
-    else {
-      val bb = java.nio.ByteBuffer.wrap(data)
-      val fmt = bb.get() match {
-        case 1 => "png"; case 2 => "jpeg"; case 3 => "wav"; case 4 => "mp4"
-        case _ => "raw"
-      }
-      bb.position(1)
-      // 3-byte alignment skip keeps the fake header 12 bytes
-      bb.position(4)
-      val w = bb.getInt(); val h = bb.getInt()
-      val frames = math.max(1, (data.length - 12) / math.max(1, w * h))
-      (fmt, w, h, frames)
-    }
-  }
-
-  /** Resize: REAL nearest-neighbor for PPM/BMP payloads (re-encoded as
-    * P6); STUB for fake-header payloads — keeps the header and
-    * truncates/pads the payload to w*h bytes so output size is what a
-    * real grayscale resize would produce.
-    */
-  private[multimodal] def resizeKernel(data: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    decodePpm(data).orElse(decodePgm(data)).orElse(decodeBmp(data))
-      .orElse(decodeImageIO(data).map { case (_, w0, h0, rgb) => (w0, h0, rgb) }) match {
-      case Some((w0, h0, rgb)) =>
-        return encodePpm(w, h, resizeRgb(w0, h0, rgb, w, h))
-      case None =>
-    }
-    if (data == null || data.length < 12) Array.emptyByteArray
-    else {
-      val out = new Array[Byte](12 + w * h)
-      System.arraycopy(data, 0, out, 0, 12)
-      val bb = java.nio.ByteBuffer.wrap(out)
-      bb.position(4); bb.putInt(w); bb.putInt(h)
-      var i = 0
-      while (i < w * h) {
-        out(12 + i) = data(12 + (i % math.max(1, data.length - 12)))
-        i += 1
-      }
-      out
-    }
-  }
-
-  /** STUB frame sampling: every k-th fixed-size block of the payload
-    * (a real kernel would seek keyframes).
-    */
-  private[multimodal] def frameKernel(
-      data: Array[Byte], frameBytes: Int, everyK: Int): Seq[Array[Byte]] = {
-    if (data == null || data.length <= 12 || frameBytes <= 0) Nil
-    else data.drop(12).grouped(frameBytes).zipWithIndex
-      .collect { case (f, i) if i % everyK == 0 => f }
-      .toSeq
-  }
-
-  /** REAL audio feature for WAV payloads: the 16-window RMS energy
-    * envelope (normalized to [0,1] against full-scale PCM16) — the
-    * standard voice-activity / silence-trim signal; the hash stub
-    * stands in for formats that need an external codec. */
-  private[multimodal] def envelopeKernel(data: Array[Byte]): Array[Float] =
-    decodeWav(data) match {
-      case Some((_, _, samples)) if samples.nonEmpty =>
-        val win = math.max(1, samples.length / 16)
-        Array.tabulate(16) { w =>
-          val from = w * win
-          val until = math.min(samples.length, from + win)
-          if (from >= until) 0f
-          else {
-            var sumsq = 0L
-            var i = from
-            while (i < until) {
-              sumsq += samples(i).toLong * samples(i); i += 1
-            }
-            (math.sqrt(sumsq.toDouble / (until - from)) / 32768.0).toFloat
-          }
-        }
-      case _ => featureKernel(data)
-    }
-
-  /** STUB feature extraction: 16 deterministic hash-derived floats (a
-    * real kernel would run an image/audio encoder).
-    */
-  private[multimodal] def featureKernel(data: Array[Byte]): Array[Float] = {
-    val base = if (data == null) 0L else
-      data.foldLeft(1469598103934665603L)((h, b) => (h ^ b) * 1099511628211L)
-    Array.tabulate(16) { i =>
-      val x = base * (i * 2 + 1)
-      ((x >>> 11).toDouble / (1L << 53).toDouble).toFloat
-    }
-  }
-
-  // ---------------------------------------------------------------
-  // Spark plumbing (real)
-  // ---------------------------------------------------------------
-
-  private val decodeUdf = udf { data: Array[Byte] =>
-    val (fmt, w, h, frames) = decodeKernel(data)
-    (fmt, w, h, frames, if (data == null) 0L else data.length.toLong)
-  }
-
-  /** Decode metadata for a binary media column. */
-  def withMediaMeta(df: DataFrame, mediaCol: String, metaCol: String = "media_meta"): DataFrame =
-    df.withColumn(metaCol,
-      decodeUdf(col(mediaCol))
-        .cast(mediaMetaSchema.asInstanceOf[DataType])
-        .as(metaCol))
-
-  private val resizeUdf = udf { (data: Array[Byte], w: Int, h: Int) =>
-    resizeKernel(data, w, h)
-  }
-
-  def resized(mediaCol: Column, w: Int, h: Int): Column =
-    resizeUdf(mediaCol, lit(w), lit(h))
-
-  private val framesUdf = udf { (data: Array[Byte], frameBytes: Int, everyK: Int) =>
-    frameKernel(data, frameBytes, everyK)
-  }
-
-  /** Sampled frames as an array<binary> column (explode downstream). */
-  def sampledFrames(mediaCol: Column, frameBytes: Int, everyK: Int): Column =
-    framesUdf(mediaCol, lit(frameBytes), lit(everyK))
-
-  private val featureUdf = udf { data: Array[Byte] => featureKernel(data) }
-
-  /** Embedding-style features — feeds directly into the Similarity
-    * operators (same array<float> contract as `embeddings.embedding`).
-    */
-  def mediaFeatures(mediaCol: Column): Column = featureUdf(mediaCol)
-
-  private val envelopeUdf = udf { data: Array[Byte] => envelopeKernel(data) }
-
-  /** 16-window RMS energy envelope: REAL for RIFF/PCM16 WAV payloads
-    * (silence detection / activity trimming), hash-stub features for
-    * codec-gated formats — same array<float> column contract as
-    * [[mediaFeatures]]. */
-  def audioEnvelope(mediaCol: Column): Column = envelopeUdf(mediaCol)
-
-  private val rgbUdf = udf { data: Array[Byte] =>
-    decodePpm(data).orElse(decodePgm(data)).orElse(decodeBmp(data))
-      .orElse(decodeImageIO(data).map { case (_, w0, h0, rgb) => (w0, h0, rgb) })
-      .map(_._3).orNull
-  }
-
-  /** REAL decoded pixels (top-down RGB byte triplets) for
-    * PPM/PGM/BMP/JPEG/PNG payloads; null for formats that would need
-    * an external codec (video).
-    */
-  def decodedRgb(mediaCol: Column): Column = rgbUdf(mediaCol)
-
-  /** Y3: spread rows before the expensive decode stage. */
-  def withDecodeParallelism(df: DataFrame, partitions: Int): DataFrame =
-    df.repartition(partitions)
-
-  /** A deterministic fake media payload for fixtures: fake header +
-    * pseudo-random body.
-    */
-  def fakeMedia(fmt: Int, w: Int, h: Int, bodyBytes: Int, seed: Int): Array[Byte] = {
-    val out = new Array[Byte](12 + bodyBytes)
-    val bb = java.nio.ByteBuffer.wrap(out)
-    bb.put(fmt.toByte); bb.position(4); bb.putInt(w); bb.putInt(h)
-    var i = 0
-    var x = seed | 1
-    while (i < bodyBytes) {
-      x = x * 1103515245 + 12345
-      out(12 + i) = (x >>> 16).toByte
-      i += 1
-    }
-    out
   }
 }

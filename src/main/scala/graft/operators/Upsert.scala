@@ -18,26 +18,10 @@ object Upsert {
     * MERGE INTO raises on multiple matches; this plan-only operator
     * cannot check that without materializing the update batch, so a
     * duplicate-keyed batch passes through as duplicate output rows.
-    * Call [[upsertChecked]] to pay one aggregation for the guarantee.
     */
   def upsert(base: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "upsert needs at least one key column")
     val keyOnly = updates.select(keys.map(updates.col): _*)
     updates.unionByName(base.join(keyOnly, keys, "left_anti"))
-  }
-
-  /** [[upsert]] with the MERGE INTO multiple-match check: raises if
-    * `updates` contains duplicate keys (costs one groupBy job over the
-    * update batch — small by the operator's own design assumption).
-    */
-  def upsertChecked(base: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
-    require(keys.nonEmpty, "upsert needs at least one key column")
-    val dupes = updates.groupBy(keys.map(updates.col): _*)
-      .count().filter(org.apache.spark.sql.functions.col("count") > 1)
-    val sample = dupes.limit(3).collect()
-    require(sample.isEmpty,
-      s"updates carry multiple rows per key (MERGE INTO multiple-match): " +
-        sample.mkString(", "))
-    upsert(base, updates, keys)
   }
 }

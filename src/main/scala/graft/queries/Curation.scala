@@ -39,23 +39,6 @@ object Curation extends QueryPack {
   private def toks(c: Column): Column =
     graft.functions.TextFunctions.tokens(c)
 
-  /** Positional word n-grams as space-joined strings; empty when the
-    * doc is shorter than n (guarded — Spark's `sequence(1, 0)` would
-    * count DOWN, unlike DuckDB's empty `generate_series(1, 0)`).
-    */
-  def ngrams(tk: Column, n: Int): Column =
-    when(size(tk) >= n,
-      transform(sequence(lit(1), size(tk) - (n - 1)),
-        i => array_join(slice(tk, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-
-  /** 16-byte gram fingerprints for cross-document shuffles. */
-  def ngramIds(tk: Column, n: Int): Column =
-    when(size(tk) >= n,
-      transform(sequence(lit(1), size(tk) - (n - 1)),
-        i => md5(array_join(slice(tk, i, lit(n)), " "))))
-      .otherwise(array().cast("array<string>"))
-
   /** Per-document repeated-n-gram statistics vs the whole corpus:
     * for each doc, the fraction of its n-gram positions whose n-gram
     * also occurs in at least one OTHER document. Docs shorter than n
@@ -112,7 +95,7 @@ object Curation extends QueryPack {
       .select(col("doc_id"), toks(col("text")).as("tk"))
     // unigrams explode the token array directly; 2/3-grams go through
     // the compiled positional-gram pass (NgramJoin; HOF-equivalence-
-    // tested against `ngrams`)
+    // tested against CurationSpec's `ngrams`)
     def gramCounts(n: Int): DataFrame = base
       .select(col("doc_id"),
         explode(if (n == 1) col("tk")

@@ -173,9 +173,9 @@ object Dedup extends QueryPack {
     * (8-byte compares; set sizes are preserved — 64-bit collisions are
     * ~|vocab|²/2⁶⁴ and the string-space oracle would flag distortion).
     */
-  private def hashedTokenSets(docs: DataFrame): DataFrame =
+  private[graft] def hashedTokenSets(docs: DataFrame): DataFrame =
     // conditional spread by doc_id off the single-task scan (guide
-    // §2.5): both callers persist this frame and re-join it by doc id,
+    // §2.5): callers persist this frame and re-join it by doc id,
     // so the tokenize+hash kernel and every cached pass ran on one
     // core before; the id-keyed re-attach joins reuse the
     // partitioning. No-op on a many-file table (the gate).
@@ -185,80 +185,6 @@ object Dedup extends QueryPack {
       array_sort(transform(array_distinct(tokens(col("text"))),
         tk => xxhash64(tk))).as("toks"))
       .withColumn("nt", size(col("toks")))
-
-  /** Exact same-lang Jaccard ≥ `threshold` pairs via PREFIX FILTERING
-    * (the SSJoin/PPJoin principle — Chaudhuri et al., ICDE 2006; Xiao
-    * et al., WWW 2008; public algorithm):
-    *
-    * J(A,B) ≥ t implies min(|A|,|B|)/max ≥ t, hence the required
-    * overlap is o ≥ ⌈t·|A|⌉, and any qualifying pair must share a
-    * token within the first `|X| − ⌈t·|X|⌉ + 1` tokens of EACH side
-    * under any one global total order. Ordering tokens by ascending
-    * document frequency puts each doc's RAREST tokens in its prefix, so
-    * candidate generation is an equi-join on (lang, rare-token) — near
-    * linear in practice — instead of the quadratic within-block join.
-    * The join ships (token, doc_id) rows only; token sets re-attach to
-    * the few surviving candidates by id (q21's ids-only discipline).
-    * Verify stage is the exact sorted-merge intersect, so the result
-    * set is identical to the brute-force block join (equivalence-
-    * tested against [[saltedJaccardPairs]] in DedupSpec).
-    *
-    * WHEN to pick which plan: prefix filtering wins when prefix tokens
-    * are selective (realistic Zipfian vocabularies — candidates scale
-    * with rare-token collisions, not block size²). On a tiny-vocab
-    * corpus every token is common and the prefix join degenerates to
-    * more candidates than the size-filtered block join itself (measured
-    * here at sf0.1: vocab ≈31 tokens/lang → 2.46M prefix candidates vs
-    * 583k block pairs), which is why q22 runs [[saltedJaccardPairs]].
-    */
-  def prefixJaccardPairs(
-      docs: DataFrame,
-      threshold: Double = 0.95): DataFrame = {
-    // persist() lives until the caller materializes the result; the
-    // mains clear it per-query (spark.catalog.clearCache()), long-lived
-    // sessions own the same responsibility
-    val sets = hashedTokenSets(docs).persist()
-    // global document frequency per token hash — the prefix order
-    val df = sets
-      .select(col("lang"), explode(col("toks")).as("tok"))
-      .groupBy("lang", "tok")
-      .agg(count(lit(1)).as("df"))
-    // per-doc prefix: k rarest tokens, k = n − ⌈t·n⌉ + 1
-    val prefixes = sets
-      .select(col("doc_id"), col("lang"), col("nt"),
-        explode(col("toks")).as("tok"))
-      .join(df, Seq("lang", "tok"))
-      .withColumn("k",
-        (col("nt") - ceil(col("nt") * threshold) + 1).cast("int"))
-      .withColumn("rk",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy(col("df"), col("tok"))))
-      .filter(col("rk") <= col("k"))
-      .select(col("lang"), col("tok"), col("doc_id"))
-    // candidates: ids only through the (lang, token) equi-join
-    val cand = prefixes
-      .join(prefixes
-          .withColumnRenamed("doc_id", "doc_b"),
-        Seq("lang", "tok"))
-      .filter(col("doc_id") < col("doc_b"))
-      .select(col("lang"), col("doc_id").as("doc_a"), col("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    val out = cand
-      .join(sets.select(col("doc_id").as("doc_a"),
-        col("toks").as("t_a"), col("nt").as("n_a")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"),
-        col("toks").as("t_b"), col("nt").as("n_b")), Seq("doc_b"))
-      // sound size pre-filter: J ≤ min(n)/max(n) — skips the merge
-      .filter(least(col("n_a"), col("n_b")).cast("double") >=
-        greatest(col("n_a"), col("n_b")) * threshold)
-      .withColumn("jaccard", jaccardBySize(
-        graft.functions.HashFunctions
-          .sortedLongIntersectSize(col("t_a"), col("t_b")),
-        col("n_a"), col("n_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("lang", "doc_a", "doc_b", "jaccard")
-    out
-  }
 
   /** Exact within-lang-block Jaccard verify join, Y4-salted AND
     * ids-only: lang has a handful of distinct values, so a bare
@@ -353,12 +279,12 @@ object Dedup extends QueryPack {
 
     // ---- Blocked n-gram (unigram-set) Jaccard: salted ids-only
     //      equi-join on the blocking key, exact verify on survivors.
-    //      (prefixJaccardPairs is the equivalent prefix-filtered plan
-    //      for Zipfian-vocabulary corpora; on THIS corpus the measured
+    //      (DedupSpec's prefix-filtered plan is the equivalent for
+    //      Zipfian-vocabulary corpora; on THIS corpus the measured
     //      vocab is ~31 tokens/lang, where prefix keys select nothing
     //      — 2.46M candidates vs 583k size-filtered block pairs at
-    //      sf0.1 — so the salted block join is the faster exact plan
-    //      and both are equivalence-tested in DedupSpec.) ----
+    //      sf0.1 — so the salted block join is the faster exact plan,
+    //      and the prefix plan serves as its equivalence oracle.) ----
     QueryDef(
       "q22_jaccard_blocked",
       (s, d) => saltedJaccardPairs(t(s, d, "documents")),

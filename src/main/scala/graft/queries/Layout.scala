@@ -533,9 +533,8 @@ object Layout extends QueryPack {
     //      keys). Output is one row per part: the full key map.
     //
     //      Scale shape: embarrassingly parallel projection (no
-    //      exchange at all); the downstream layout rewrite is
-    //      repartitionByRange(h) + sortWithinPartitions, same as
-    //      writeZOrdered. ----
+    //      exchange at all); a downstream layout rewrite would be
+    //      repartitionByRange(h) + sortWithinPartitions. ----
     QueryDef(
       "q324_hilbert_key",
       (s, d) => {

@@ -17,9 +17,7 @@ import graft.multimodal.Multimodal
   * single-fixture golden tests.
   *
   * Scale shape: both queries are embarrassingly parallel per-row
-  * kernels (no shuffle at all until the final tiny aggregate); the
-  * decode stage is exactly the [[Multimodal.withDecodeParallelism]]
-  * profile — repartition first, decode inside the partition.
+  * kernels: no shuffle at all until the final tiny aggregate.
   */
 object Media extends QueryPack {
 

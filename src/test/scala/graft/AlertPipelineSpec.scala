@@ -45,13 +45,18 @@ class AlertPipelineSpec extends SparkTestBase {
     }
   }
 
+  /** Timestamp → Julian date: the inverse that checks
+    * `AlertFunctions.jdToTimestamp`. */
+  private def timestampToJd(ts: Column): Column =
+    unix_micros(ts).cast("double") / lit(86400000000.0) + lit(2440587.5)
+
   test("jd/timestamp conversions invert and hit the known epoch") {
     import spark.implicits._
     // JD 2440587.5 == 1970-01-01T00:00:00Z (public almanac anchor)
     val df = Seq(2440587.5, 2459000.5, 2451544.5).toDF("jd")
     val rt = df.select(
       col("jd"),
-      AlertFunctions.timestampToJd(AlertFunctions.jdToTimestamp(col("jd"))).as("rt"),
+      timestampToJd(AlertFunctions.jdToTimestamp(col("jd"))).as("rt"),
       AlertFunctions.jdToTimestamp(col("jd")).cast("string").as("ts"))
       .collect()
     rt.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-9))

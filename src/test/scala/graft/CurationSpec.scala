@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.queries.Curation
+import CurationSpec._
 
 /** Planted-fixture evidence for the curation pack (the DuckDB oracle
   * certifies full-corpus values; these pin the semantics on inputs with
@@ -17,7 +19,7 @@ class CurationSpec extends SparkTestBase {
 
   test("ngrams: positional grams, short docs yield empty") {
     val df = docs((1L, "a b c d e f"), (2L, "a b c"))
-      .select(col("doc_id"), Curation.ngrams(split(col("text"), " "), 5).as("g"))
+      .select(col("doc_id"), ngrams(split(col("text"), " "), 5).as("g"))
     val m = df.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(m(1L) === Seq("a b c d e", "b c d e f"))
     assert(m(2L) === Seq.empty)
@@ -28,7 +30,7 @@ class CurationSpec extends SparkTestBase {
       .select(
         graft.functions.HashFunctions
           .ngramMd5(split(trim(col("text")), "\\s+"), 5).as("fast"),
-        Curation.ngramIds(split(trim(col("text")), "\\s+"), 5).as("ref"))
+        ngramIds(split(trim(col("text")), "\\s+"), 5).as("ref"))
     assert(df.filter(not(col("fast") === col("ref"))).count() === 0)
   }
 
@@ -38,7 +40,7 @@ class CurationSpec extends SparkTestBase {
         .select(
           graft.functions.HashFunctions
             .ngramJoin(split(trim(col("text")), "\\s+"), n).as("fast"),
-          Curation.ngrams(split(trim(col("text")), "\\s+"), n).as("ref"))
+          ngrams(split(trim(col("text")), "\\s+"), n).as("ref"))
       assert(df.filter(not(col("fast") === col("ref"))).count() === 0)
     }
   }
@@ -55,9 +57,9 @@ class CurationSpec extends SparkTestBase {
     for (n <- Seq(1, 2, 3, 5)) {
       val bad = docs.select(
         graft.functions.HashFunctions.ngramJoin(col("tk"), n).as("fj"),
-        Curation.ngrams(col("tk"), n).as("rj"),
+        ngrams(col("tk"), n).as("rj"),
         graft.functions.HashFunctions.ngramMd5(col("tk"), n).as("fm"),
-        Curation.ngramIds(col("tk"), n).as("rm"))
+        ngramIds(col("tk"), n).as("rm"))
         .filter(not(col("fj") === col("rj")) || not(col("fm") === col("rm")))
         .count()
       assert(bad === 0, s"n=$n mismatch")
@@ -254,4 +256,26 @@ class CurationSpec extends SparkTestBase {
         s"document text crossed into the gram window:\n$w")
     }
   }
+}
+
+object CurationSpec {
+
+  /** Positional word n-grams as space-joined strings; empty when the
+    * doc is shorter than n (guarded — Spark's `sequence(1, 0)` would
+    * count DOWN, unlike DuckDB's empty `generate_series(1, 0)`). The
+    * HOF reference form of `HashFunctions.ngramJoin`.
+    */
+  def ngrams(tk: Column, n: Int): Column =
+    when(size(tk) >= n,
+      transform(sequence(lit(1), size(tk) - (n - 1)),
+        i => array_join(slice(tk, i, lit(n)), " ")))
+      .otherwise(array().cast("array<string>"))
+
+  /** 16-byte gram fingerprints: the HOF reference form of
+    * `HashFunctions.ngramMd5`. */
+  def ngramIds(tk: Column, n: Int): Column =
+    when(size(tk) >= n,
+      transform(sequence(lit(1), size(tk) - (n - 1)),
+        i => md5(array_join(slice(tk, i, lit(n)), " "))))
+      .otherwise(array().cast("array<string>"))
 }

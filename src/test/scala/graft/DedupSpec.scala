@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
@@ -154,7 +154,7 @@ class DedupSpec extends SparkTestBase {
       (5L, s"$common phi", "fr"), // J(4,5)=20/21≈0.952: an fr pair
       (6L, s"$common phi extra1 extra2 extra3", "en")
     ).toDF("doc_id", "text", "lang")
-    val prefix = Dedup.prefixJaccardPairs(docs)
+    val prefix = prefixJaccardPairs(docs)
       .select("lang", "doc_a", "doc_b", "jaccard").collect().toSet
     val salted = Dedup.saltedJaccardPairs(docs)
       .select("lang", "doc_a", "doc_b", "jaccard").collect().toSet
@@ -173,7 +173,7 @@ class DedupSpec extends SparkTestBase {
       (1L, s"$common only1", "en")
     ).toDF("doc_id", "text", "lang")
     for (t <- Seq(0.9, 0.95)) {
-      val p = Dedup.prefixJaccardPairs(docs, t).count()
+      val p = prefixJaccardPairs(docs, t).count()
       val s = Dedup.saltedJaccardPairs(docs, t).count()
       assert(p === s, s"threshold $t")
     }
@@ -194,7 +194,7 @@ class DedupSpec extends SparkTestBase {
       for (t <- Seq(0.5, 0.8, 0.95)) {
         val key = (r: org.apache.spark.sql.Row) =>
           (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-        val p = Dedup.prefixJaccardPairs(docs, t)
+        val p = prefixJaccardPairs(docs, t)
           .select("lang", "doc_a", "doc_b", "jaccard").collect().map(key).toSet
         val s = Dedup.saltedJaccardPairs(docs, t)
           .select("lang", "doc_a", "doc_b", "jaccard").collect().map(key).toSet
@@ -252,6 +252,80 @@ class DedupSpec extends SparkTestBase {
 /** `functions._` reference forms of the single-pass hash expressions,
   * value-identical by the equivalence tests above. */
 object DedupSpec {
+
+  /** Exact same-lang Jaccard ≥ `threshold` pairs via PREFIX FILTERING
+    * (the SSJoin/PPJoin principle — Chaudhuri et al., ICDE 2006; Xiao
+    * et al., WWW 2008; public algorithm):
+    *
+    * J(A,B) ≥ t implies min(|A|,|B|)/max ≥ t, hence the required
+    * overlap is o ≥ ⌈t·|A|⌉, and any qualifying pair must share a
+    * token within the first `|X| − ⌈t·|X|⌉ + 1` tokens of EACH side
+    * under any one global total order. Ordering tokens by ascending
+    * document frequency puts each doc's RAREST tokens in its prefix, so
+    * candidate generation is an equi-join on (lang, rare-token) — near
+    * linear in practice — instead of the quadratic within-block join.
+    * The join ships (token, doc_id) rows only; token sets re-attach to
+    * the few surviving candidates by id (q21's ids-only discipline).
+    * Verify stage is the exact sorted-merge intersect, so the result
+    * set is identical to the brute-force block join: this spec checks
+    * `Dedup.saltedJaccardPairs` (q22) against it.
+    *
+    * WHEN to pick which plan: prefix filtering wins when prefix tokens
+    * are selective (realistic Zipfian vocabularies — candidates scale
+    * with rare-token collisions, not block size²). On a tiny-vocab
+    * corpus every token is common and the prefix join degenerates to
+    * more candidates than the size-filtered block join itself (measured
+    * here at sf0.1: vocab ≈31 tokens/lang → 2.46M prefix candidates vs
+    * 583k block pairs), which is why q22 runs the salted block join.
+    */
+  def prefixJaccardPairs(
+      docs: DataFrame,
+      threshold: Double = 0.95): DataFrame = {
+    // persist() lives until the caller materializes the result; the
+    // mains clear it per-query (spark.catalog.clearCache()), long-lived
+    // sessions own the same responsibility
+    val sets = Dedup.hashedTokenSets(docs).persist()
+    // global document frequency per token hash — the prefix order
+    val df = sets
+      .select(col("lang"), explode(col("toks")).as("tok"))
+      .groupBy("lang", "tok")
+      .agg(count(lit(1)).as("df"))
+    // per-doc prefix: k rarest tokens, k = n − ⌈t·n⌉ + 1
+    val prefixes = sets
+      .select(col("doc_id"), col("lang"), col("nt"),
+        explode(col("toks")).as("tok"))
+      .join(df, Seq("lang", "tok"))
+      .withColumn("k",
+        (col("nt") - ceil(col("nt") * threshold) + 1).cast("int"))
+      .withColumn("rk",
+        row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy("doc_id").orderBy(col("df"), col("tok"))))
+      .filter(col("rk") <= col("k"))
+      .select(col("lang"), col("tok"), col("doc_id"))
+    // candidates: ids only through the (lang, token) equi-join
+    val cand = prefixes
+      .join(prefixes
+          .withColumnRenamed("doc_id", "doc_b"),
+        Seq("lang", "tok"))
+      .filter(col("doc_id") < col("doc_b"))
+      .select(col("lang"), col("doc_id").as("doc_a"), col("doc_b"))
+      .dropDuplicates("doc_a", "doc_b")
+    val out = cand
+      .join(sets.select(col("doc_id").as("doc_a"),
+        col("toks").as("t_a"), col("nt").as("n_a")), Seq("doc_a"))
+      .join(sets.select(col("doc_id").as("doc_b"),
+        col("toks").as("t_b"), col("nt").as("n_b")), Seq("doc_b"))
+      // sound size pre-filter: J ≤ min(n)/max(n) — skips the merge
+      .filter(least(col("n_a"), col("n_b")).cast("double") >=
+        greatest(col("n_a"), col("n_b")) * threshold)
+      .withColumn("jaccard", jaccardBySize(
+        graft.functions.HashFunctions
+          .sortedLongIntersectSize(col("t_a"), col("t_b")),
+        col("n_a"), col("n_b")))
+      .filter(col("jaccard") >= threshold)
+      .select("lang", "doc_a", "doc_b", "jaccard")
+    out
+  }
 
   /** HOF reference form of [[graft.functions.TextFunctions.wordShingles]].
     * Guard: sequence(1, 0) DESCENDS in Spark, which would feed

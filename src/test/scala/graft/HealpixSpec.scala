@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.alerts.Healpix
 import graft.functions.SpatialFunctions
+import HealpixSpec.pix2angNest
 
 /** HEALPix correctness by structural property — no healpy goldens are
   * available offline, so correctness rests on the scheme's defining
@@ -47,7 +48,7 @@ class HealpixSpec extends SparkTestBase {
   test("round trip: pixel center maps back to the same pixel") {
     for (nside <- Seq(1, 8, 256); (ra, dec) <- samples.take(500)) {
       val p = Healpix.ang2pixNest(nside, ra, dec)
-      val (cra, cdec) = Healpix.pix2angNest(nside, p)
+      val (cra, cdec) = pix2angNest(nside, p)
       assert(Healpix.ang2pixNest(nside, cra, cdec) === p,
         s"round trip broke: nside=$nside pix=$p center=($cra,$cdec)")
     }
@@ -56,7 +57,7 @@ class HealpixSpec extends SparkTestBase {
   test("pix2ang is a left inverse over every pixel at nside=8") {
     val nside = 8
     for (p <- 0L until 12L * nside * nside) {
-      val (ra, dec) = Healpix.pix2angNest(nside, p)
+      val (ra, dec) = pix2angNest(nside, p)
       assert(Healpix.ang2pixNest(nside, ra, dec) === p, s"pixel $p")
     }
   }
@@ -84,5 +85,60 @@ class HealpixSpec extends SparkTestBase {
       .select(SpatialFunctions.ang2pixMulti(col("ra"), col("dec"), Seq(64, 128, 256)))
       .collect()(0).getSeq[Long](0)
     assert(row === Seq(64, 128, 256).map(n => Healpix.ang2pixNest(n, 10.0, 20.0)))
+  }
+}
+
+object HealpixSpec {
+
+  /** Compress even bit positions of v into the low bits. */
+  private def compressBits(v: Long): Int = {
+    var x = v & 0x5555555555555555L
+    x = (x | (x >> 1)) & 0x3333333333333333L
+    x = (x | (x >> 2)) & 0x0f0f0f0f0f0f0f0fL
+    x = (x | (x >> 4)) & 0x00ff00ff00ff00ffL
+    x = (x | (x >> 8)) & 0x0000ffff0000ffffL
+    x = (x | (x >> 16)) & 0x00000000ffffffffL
+    x.toInt
+  }
+
+  // ring index of the southernmost corner of each face, in nside units
+  private val jrll = Array(2, 2, 2, 2, 3, 3, 3, 3, 4, 4, 4, 4)
+  // phi index offset of each face, in π/(4·nr) units
+  private val jpll = Array(1, 3, 5, 7, 0, 2, 4, 6, 1, 3, 5, 7)
+
+  /** Center (ra, dec) in degrees of a nested pixel — the inverse of
+    * `Healpix.ang2pixNest` (Górski et al. 2005), the round-trip oracle
+    * of this spec and GraftProperties.
+    */
+  def pix2angNest(nside: Int, pix: Long): (Double, Double) = {
+    val npface = nside.toLong * nside.toLong
+    val face = (pix / npface).toInt
+    val within = pix % npface
+    val ix = compressBits(within)
+    val iy = compressBits(within >> 1)
+    val jr = jrll(face).toLong * nside - ix - iy - 1 // ring index
+    var z = 0.0
+    var kshift = 0L
+    var nr = 0L
+    if (jr < nside) { // north polar cap
+      nr = jr
+      z = 1.0 - (nr * nr).toDouble / (3.0 * nside * nside)
+      kshift = 0
+    } else if (jr > 3L * nside) { // south polar cap
+      nr = 4L * nside - jr
+      z = -1.0 + (nr * nr).toDouble / (3.0 * nside * nside)
+      kshift = 0
+    } else { // equatorial belt
+      nr = nside
+      z = (2L * nside - jr) * 2.0 / (3.0 * nside)
+      kshift = (jr - nside) & 1
+    }
+    var jp = (jpll(face) * nr + ix - iy + 1 + kshift) / 2
+    if (jp > 4 * nr) jp -= 4 * nr
+    if (jp < 1) jp += 4 * nr
+    val phi = (jp - (kshift + 1) * 0.5) * (math.Pi / (2.0 * nr))
+    val ra = math.toDegrees(phi)
+    val dec = math.toDegrees(math.asin(z))
+    (ra, dec)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.HilbertCurve
+import HilbertSpec.d2xy
 
 /** Hilbert curve kernel correctness by its defining invariants (which
   * no wrong rotation/flip can satisfy simultaneously) plus the small
@@ -26,15 +27,15 @@ class HilbertSpec extends SparkTestBase {
     assert(ds.min === 0L && ds.max === n * n - 1)
     for (x <- 0L until n; y <- 0L until n) {
       val d = HilbertCurve.xy2d(5, x, y)
-      assert(HilbertCurve.d2xy(5, d) === ((x, y)))
+      assert(d2xy(5, d) === ((x, y)))
     }
   }
 
   test("locality: consecutive curve positions are adjacent cells") {
     val n = 1L << 6
-    var prev = HilbertCurve.d2xy(6, 0)
+    var prev = d2xy(6, 0)
     for (d <- 1L until n * n) {
-      val cur = HilbertCurve.d2xy(6, d)
+      val cur = d2xy(6, d)
       val manhattan =
         math.abs(cur._1 - prev._1) + math.abs(cur._2 - prev._2)
       assert(manhattan === 1L,
@@ -99,5 +100,34 @@ class HilbertSpec extends SparkTestBase {
     val zJumps = jumps(zIndex)
     assert(hJumps === 0)
     assert(zJumps > 100)
+  }
+}
+
+object HilbertSpec {
+
+  /** Inverse walk: curve distance → (x, y), the other half of the
+    * published `xy2d`/`d2xy` pair. Witness that `HilbertCurve.xy2d` is
+    * a bijection on the grid. */
+  def d2xy(order: Int, d0: Long): (Long, Long) = {
+    var x = 0L
+    var y = 0L
+    var t = d0
+    var s = 1L
+    while (s < (1L << order)) {
+      val rx = 1L & (t / 2)
+      val ry = 1L & (t ^ rx)
+      if (ry == 0) {
+        if (rx == 1) {
+          x = s - 1 - x
+          y = s - 1 - y
+        }
+        val tmp = x; x = y; y = tmp
+      }
+      x += s * rx
+      y += s * ry
+      t /= 4
+      s *= 2
+    }
+    (x, y)
   }
 }

@@ -3,175 +3,29 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
+import MultimodalSpec._
 
-/** Multimodal plumbing: binary columns with typed metadata, resize and
-  * frame-sample transforms, feature extraction feeding the similarity
-  * stack, parquet round trip, decode-stage repartitioning. Kernels are
-  * deterministic stubs — the Spark contract around them is the subject.
+/** The media codecs the Media pack runs (q158, q159, q326): golden
+  * round trips through the real PNG/JPEG/GIF (ImageIO) and WAV (RIFF
+  * PCM16) codecs, malformed payloads that must decode to None, and
+  * binary media columns surviving a parquet round trip.
   */
 class MultimodalSpec extends SparkTestBase {
 
-  private lazy val media = {
-    import spark.implicits._
-    (0 until 30).map { i =>
-      (i.toLong, Multimodal.fakeMedia(
-        fmt = 1 + i % 4, w = 8 + i % 3, h = 8, bodyBytes = 256, seed = i))
-    }.toDF("media_id", "data")
-  }
-
-  test("metadata decode yields the typed struct") {
-    val out = Multimodal.withMediaMeta(media, "data")
-    assert(out.schema("media_meta").dataType === Multimodal.mediaMetaSchema)
-    val r = out.filter(col("media_id") === 0)
-      .select("media_meta.format", "media_meta.width", "media_meta.bytes")
-      .collect()(0)
-    assert(r.getString(0) === "png" && r.getInt(1) === 8 && r.getLong(2) === 268L)
-    // null payloads degrade, not crash
-    import spark.implicits._
-    val withNull = Seq((99L, null: Array[Byte])).toDF("media_id", "data")
-    val nr = Multimodal.withMediaMeta(withNull, "data")
-      .select("media_meta.format").collect()(0)
-    assert(nr.getString(0) === "unknown")
-  }
-
-  test("resize changes dimensions deterministically") {
-    val out = media.withColumn("small", Multimodal.resized(col("data"), 4, 4))
-    val sizes = out.select(length(col("small"))).distinct().collect()
-    assert(sizes.length === 1 && sizes(0).getInt(0) === 12 + 16)
-    val twice = media.withColumn("small", Multimodal.resized(col("data"), 4, 4))
-      .select(md5(col("small"))).collect().map(_.getString(0))
-    val again = media.withColumn("small", Multimodal.resized(col("data"), 4, 4))
-      .select(md5(col("small"))).collect().map(_.getString(0))
-    assert(twice.sameElements(again), "stub kernels must be deterministic")
-  }
-
-  test("frame sampling explodes into bounded binary frames") {
-    val frames = media
-      .select(col("media_id"),
-        explode(Multimodal.sampledFrames(col("data"), frameBytes = 64, everyK = 2))
-          .as("frame"))
-    // 256-byte body / 64 = 4 blocks, every 2nd → 2 frames per row
-    assert(frames.count() === media.count() * 2)
-    assert(frames.select(max(length(col("frame")))).collect()(0).getInt(0) <= 64)
-  }
-
-  test("media features feed the ANN contract (array<float>, fixed dim)") {
-    val feats = media.select(
-      col("media_id").as("vec_id"),
-      Multimodal.mediaFeatures(col("data")).as("embedding"))
-    assert(feats.schema("embedding").dataType ===
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, containsNull = false))
-    val dims = feats.select(size(col("embedding"))).distinct().collect()
-    assert(dims.length === 1 && dims(0).getInt(0) === 16)
-    // deterministic across evaluation
-    val a = feats.collect().map(_.toString).sorted
-    val b = media.select(col("media_id").as("vec_id"),
-      Multimodal.mediaFeatures(col("data")).as("embedding"))
-      .collect().map(_.toString).sorted
-    assert(a.sameElements(b))
-  }
-
-  // ---- REAL codec-free decoders: golden-pixel fixtures ----
-
-  /** 2x2 P6 with a header comment; pixels RGGB-ish, row-major RGB. */
-  private val goldenPpm: Array[Byte] =
-    ("P6\n# golden fixture\n2 2\n255\n".getBytes("US-ASCII") ++
-      Array[Int](
-        255, 0, 0,   0, 255, 0, // row 0: red, green
-        0, 0, 255, 128, 64, 32  // row 1: blue, brownish
-      ).map(_.toByte))
-
-  /** 3x2 24bpp BMP, BOTTOM-UP rows with 4-byte row padding (rowSize
-    * 12 for w=3), BGR order. Logical top-down RGB: row0 = (10,20,30),
-    * (40,50,60),(70,80,90); row1 = (1,2,3),(4,5,6),(7,8,9). */
-  private val goldenBmp: Array[Byte] = {
-    val rowSize = 12
-    val out = new Array[Byte](54 + rowSize * 2)
-    val bb = java.nio.ByteBuffer.wrap(out)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put('B'.toByte).put('M'.toByte).putInt(out.length)
-      .putShort(0).putShort(0).putInt(54)
-    bb.putInt(40).putInt(3).putInt(2) // positive height = bottom-up
-      .putShort(1).putShort(24).putInt(0).putInt(rowSize * 2)
-      .putInt(2835).putInt(2835).putInt(0).putInt(0)
-    def px(row: Int, x: Int, r: Int, g: Int, b: Int): Unit = {
-      val o = 54 + row * rowSize + x * 3
-      out(o) = b.toByte; out(o + 1) = g.toByte; out(o + 2) = r.toByte
-    }
-    // file row 0 is the BOTTOM logical row
-    px(0, 0, 1, 2, 3); px(0, 1, 4, 5, 6); px(0, 2, 7, 8, 9)
-    px(1, 0, 10, 20, 30); px(1, 1, 40, 50, 60); px(1, 2, 70, 80, 90)
-    out
-  }
-
-  test("PPM decode is real: golden pixels, comment handling, metadata") {
-    import spark.implicits._
-    val df = Seq((1L, goldenPpm)).toDF("media_id", "data")
-    val meta = Multimodal.withMediaMeta(df, "data")
-      .select("media_meta.format", "media_meta.width", "media_meta.height")
-      .collect()(0)
-    assert(meta.getString(0) === "ppm")
-    assert(meta.getInt(1) === 2 && meta.getInt(2) === 2)
-    val rgb = df.select(Multimodal.decodedRgb(col("data"))).collect()(0)
-      .getAs[Array[Byte]](0)
-    assert(rgb.map(_ & 0xff).toSeq === Seq(
-      255, 0, 0, 0, 255, 0, 0, 0, 255, 128, 64, 32))
-    // truncated payload degrades to unknown, decode to null — no crash
-    val bad = Seq((2L, goldenPpm.dropRight(3))).toDF("media_id", "data")
-    assert(Multimodal.withMediaMeta(bad, "data")
-      .select("media_meta.format").collect()(0).getString(0) === "unknown")
-    assert(bad.select(Multimodal.decodedRgb(col("data"))).collect()(0).isNullAt(0))
-  }
-
-  test("BMP decode is real: padding, bottom-up flip, BGR→RGB swizzle") {
-    import spark.implicits._
-    val df = Seq((1L, goldenBmp)).toDF("media_id", "data")
-    val meta = Multimodal.withMediaMeta(df, "data")
-      .select("media_meta.format", "media_meta.width", "media_meta.height")
-      .collect()(0)
-    assert(meta.getString(0) === "bmp")
-    assert(meta.getInt(1) === 3 && meta.getInt(2) === 2)
-    val rgb = df.select(Multimodal.decodedRgb(col("data"))).collect()(0)
-      .getAs[Array[Byte]](0)
-    // top-down RGB after the flip and swizzle
-    assert(rgb.map(_ & 0xff).toSeq === Seq(
-      10, 20, 30, 40, 50, 60, 70, 80, 90,
-      1, 2, 3, 4, 5, 6, 7, 8, 9))
-  }
-
-  test("real-format resize is a true nearest-neighbor, P6 round trip") {
-    import spark.implicits._
-    val df = Seq((1L, goldenPpm)).toDF("media_id", "data")
-    // test-side P6 parser, independent of the implementation
-    def parseP6(b: Array[Byte]): (Int, Int, Array[Byte]) = {
-      val s = new String(b.takeWhile(_ != 0), "ISO-8859-1")
-      val m = """(?s)P6\s+(\d+)\s+(\d+)\s+255\s""".r
-        .findPrefixMatchOf(s).get
-      (m.group(1).toInt, m.group(2).toInt, b.drop(m.end))
-    }
-    val small = df.select(Multimodal.resized(col("data"), 1, 1))
-      .collect()(0).getAs[Array[Byte]](0)
-    // 2x2 → 1x1 nearest-neighbor picks source (0,0) = red, and the
-    // output is itself a valid P6 payload
-    val (w, h, rgb) = parseP6(small)
-    assert(w === 1 && h === 1)
-    assert(rgb.take(3).map(_ & 0xff).toSeq === Seq(255, 0, 0))
-    // upscale 2x2 → 4x4 replicates each source pixel 2x2
-    val big = df.select(Multimodal.resized(col("data"), 4, 4))
-      .collect()(0).getAs[Array[Byte]](0)
-    val (bw, bh, brgb) = parseP6(big)
-    assert(bw === 4 && bh === 4)
-    def at(x: Int, y: Int): Seq[Int] =
-      brgb.slice((y * 4 + x) * 3, (y * 4 + x) * 3 + 3).map(_ & 0xff).toSeq
-    assert(at(0, 0) === Seq(255, 0, 0) && at(1, 1) === Seq(255, 0, 0))
-    assert(at(2, 0) === Seq(0, 255, 0) && at(3, 1) === Seq(0, 255, 0))
-    assert(at(0, 2) === Seq(0, 0, 255) && at(2, 2) === Seq(128, 64, 32))
-  }
-
   test("binary columns round-trip parquet and repartition for decode") {
+    import spark.implicits._
+    // real PNG and WAV payloads, spread over six partitions before the
+    // write as a decode stage would be
+    val media = (0 until 30).map { i =>
+      val payload =
+        if (i % 2 == 0)
+          Multimodal.encodePng(2, 2, Array.tabulate[Byte](12)(j => (i * j).toByte))
+        else
+          Multimodal.encodeWav(8000, 1, Array.tabulate[Short](8 + i)(j => (i * j).toShort))
+      (i.toLong, payload)
+    }.toDF("media_id", "data")
     val dir = java.nio.file.Files.createTempDirectory("graft_media_").toString
-    Multimodal.withDecodeParallelism(media, 6).write.mode("overwrite").parquet(dir)
+    media.repartition(6).write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     assert(back.count() === 30)
     val orig = media.select(col("media_id"), md5(col("data")).as("h"))
@@ -180,32 +34,7 @@ class MultimodalSpec extends SparkTestBase {
       .foreach(r => assert(orig(r.getLong(0)) === r.getString(1)))
   }
 
-  test("PGM decode is real: grayscale expands to RGB, header tolerant") {
-    import spark.implicits._
-    // 3x2 gradient with a header comment
-    val pixels = Array[Byte](0, 50, 100, (150 & 0xff).toByte,
-      (200 & 0xff).toByte, (250 & 0xff).toByte)
-    val payload = "P5\n# gray\n3 2\n255\n".getBytes("US-ASCII") ++ pixels
-    val Some((w, h, rgb)) = graft.multimodal.Multimodal.decodePgm(payload)
-    assert(w === 3 && h === 2)
-    assert(rgb.length === 18)
-    // every pixel expands to an equal triplet
-    pixels.zipWithIndex.foreach { case (g, i) =>
-      assert(rgb(3 * i) === g && rgb(3 * i + 1) === g && rgb(3 * i + 2) === g)
-    }
-    val df = Seq((1L, payload)).toDF("media_id", "data")
-    val meta = graft.multimodal.Multimodal.withMediaMeta(df, "data")
-      .select("media_meta.*").collect()(0)
-    assert(meta.getAs[String]("format") === "pgm")
-    assert(meta.getAs[Int]("width") === 3 && meta.getAs[Int]("height") === 2)
-    // truncated P5 stays unknown, never fake-decoded
-    val (fmt, _, _, _) =
-      graft.multimodal.Multimodal.decodeKernel(payload.take(10))
-    assert(fmt === "unknown")
-  }
-
   test("WAV decode is real: RIFF chunk walk, PCM16 round trip, meta") {
-    import spark.implicits._
     // golden fixture: 2 s of an 8 kHz mono square wave at full scale,
     // with an unknown LIST chunk between fmt and data that the chunk
     // walk must skip
@@ -226,21 +55,11 @@ class MultimodalSpec extends SparkTestBase {
       assert(r === rate && ch === 1)
       assert(got.sameElements(samples), "PCM16 samples must round-trip")
     }
-    // metadata surfaces through the typed decode column
-    val df = Seq((1L, plain)).toDF("media_id", "data")
-    val meta = Multimodal.withMediaMeta(df, "data").select("media_meta.*")
-      .collect()(0)
-    assert(meta.getAs[String]("format") === "wav")
-    assert(meta.getAs[Int]("width") === rate) // sample rate in w slot
-    assert(meta.getAs[Int]("height") === 1) // channels
-    assert(meta.getAs[Int]("n_frames") === 2) // whole seconds
-    // malformed RIFF (truncated) stays unknown, never fake-decoded
-    val (fmt, _, _, _) = Multimodal.decodeKernel(plain.take(30))
-    assert(fmt === "unknown")
+    // malformed RIFF (truncated header) never decodes
+    assert(Multimodal.decodeWav(plain.take(30)).isEmpty)
   }
 
   test("PNG decode is real: ImageIO lossless round trip, golden pixels") {
-    import spark.implicits._
     // 3x2 primary-color grid, encoded to PNG by the JDK codec and
     // decoded back by the production kernel: lossless → exact bytes
     val rgb = Array[Byte](
@@ -251,31 +70,14 @@ class MultimodalSpec extends SparkTestBase {
     val Some((fmt, w, h, back)) = Multimodal.decodeImageIO(png)
     assert(fmt === "png" && w === 3 && h === 2)
     assert(back.sameElements(rgb), "PNG is lossless: exact pixel bytes")
-    // metadata + real decoded pixels flow through the Spark plumbing
-    val df = Seq((1L, png)).toDF("media_id", "data")
-    val meta = Multimodal.withMediaMeta(df, "data").select("media_meta.*")
-      .collect()(0)
-    assert(meta.getAs[String]("format") === "png")
-    assert(meta.getAs[Int]("width") === 3 && meta.getAs[Int]("height") === 2)
-    val px = df.select(Multimodal.decodedRgb(col("data")).as("px"))
-      .collect()(0).getAs[Array[Byte]]("px")
-    assert(px.sameElements(rgb))
-    // resize through the real path: 3x2 → 6x4 nearest-neighbor
-    val res = df.select(Multimodal.resized(col("data"), 6, 4).as("r"))
-      .collect()(0).getAs[Array[Byte]]("r")
-    val Some((rw, rh, rpx)) = Multimodal.decodePpm(res)
-    assert(rw === 6 && rh === 4)
-    // nearest-neighbor: top-left quadrant pixel is the original red
-    assert(rpx(0) === 255.toByte && rpx(1) === 0 && rpx(2) === 0)
-    // truncated PNG stays unknown, never fake-decoded
-    assert(Multimodal.decodeKernel(png.take(20))._1 === "unknown")
+    // truncated PNG never decodes
+    assert(Multimodal.decodeImageIO(png.take(20)).isEmpty)
   }
 
   test("JPEG decode is real: ImageIO round trip within lossy tolerance") {
-    import spark.implicits._
     // flat mid-gray 8x8: JPEG is lossy but near-exact on flat fields
     val rgb = Array.fill[Byte](8 * 8 * 3)(128.toByte)
-    val jpg = Multimodal.encodeJpeg(8, 8, rgb)
+    val jpg = encodeJpeg(8, 8, rgb)
     assert((jpg(0) & 0xff) === 0xff && (jpg(1) & 0xff) === 0xd8,
       "real JFIF magic")
     val Some((fmt, w, h, back)) = Multimodal.decodeImageIO(jpg)
@@ -284,16 +86,9 @@ class MultimodalSpec extends SparkTestBase {
       assert(math.abs((a & 0xff) - (b & 0xff)) <= 8,
         "lossy round trip must stay within codec tolerance")
     }
-    val meta = Seq((1L, jpg)).toDF("media_id", "data")
-      .select(Multimodal.mediaFeatures(col("data")).as("f"),
-        Multimodal.decodedRgb(col("data")).as("px"))
-      .collect()(0)
-    assert(meta.getAs[Seq[Float]]("f").length === 16)
-    assert(meta.getAs[Array[Byte]]("px").length === 8 * 8 * 3)
   }
 
   test("GIF decode is real: palette-lossless round trip, golden pixels") {
-    import spark.implicits._
     // 4 distinct colors on an 8x8 diagonal: fits any palette, so the
     // GIF round trip must be byte-exact like PNG. (8x8, not smaller:
     // the JDK GIF codec corrupts the LZW stream of a 2x2 frame — a
@@ -303,39 +98,17 @@ class MultimodalSpec extends SparkTestBase {
       Array[Byte](7, 42, 99))
     val rgb = (0 until 64).flatMap(i =>
       colors((i % 8 + i / 8) % 4)).toArray
-    val gif = Multimodal.encodeGif(8, 8, rgb)
+    val gif = encodeGif(8, 8, rgb)
     assert(gif(0) === 'G' && gif(1) === 'I' && gif(2) === 'F' &&
       gif(3) === '8', "real GIF magic")
     val Some((fmt, w, h, back)) = Multimodal.decodeImageIO(gif)
     assert(fmt === "gif" && w === 8 && h === 8)
     assert(back.sameElements(rgb), "palette GIF is lossless: exact bytes")
-    // the Spark-side decode path routes GIF through the same kernel
-    val px = Seq((1L, gif)).toDF("media_id", "data")
-      .select(Multimodal.decodedRgb(col("data")).as("px"))
-      .collect()(0).getAs[Array[Byte]]("px")
-    assert(px.sameElements(rgb))
     // truncated GIF stays None, never fake-decoded
     assert(Multimodal.decodeImageIO(gif.take(10)).isEmpty)
   }
 
   test("malformed headers with overflowing dims return None, never throw") {
-    // PGM/PPM declaring 46341x46341: w*h Int-overflows negative; the
-    // Long-arithmetic guard must reject, not NegativeArraySizeException
-    val bigPgm = "P5\n46341 46341\n255\n".getBytes("US-ASCII") ++
-      Array.fill[Byte](64)(7)
-    assert(Multimodal.decodePgm(bigPgm).isEmpty)
-    val bigPpm = "P6\n46341 46341\n255\n".getBytes("US-ASCII") ++
-      Array.fill[Byte](64)(7)
-    assert(graft.multimodal.Multimodal.decodeKernel(bigPpm)._1 === "unknown")
-    // BMP with width near Int.MaxValue/3: rowSize wraps in Int math
-    val bmp = new Array[Byte](128)
-    val bb = java.nio.ByteBuffer.wrap(bmp)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bmp(0) = 'B'; bmp(1) = 'M'
-    bb.putInt(10, 54); bb.putInt(14, 40)
-    bb.putInt(18, 1431655765); bb.putInt(22, 3) // w*3 wraps negative
-    bb.putShort(26, 1); bb.putShort(28, 24); bb.putInt(30, 0)
-    assert(graft.multimodal.Multimodal.decodeKernel(bmp)._1 === "unknown")
     // WAV chunk whose declared length is near Int.MaxValue: the sum
     // pos+8+len wraps negative in Int math and would pass the bound
     val wav = Multimodal.encodeWav(8000, 1, Array.tabulate[Short](16)(_.toShort))
@@ -345,23 +118,63 @@ class MultimodalSpec extends SparkTestBase {
     wb.putInt(40, Int.MaxValue - 4) // data chunk len, offset 40 in minimal RIFF
     assert(Multimodal.decodeWav(evil).isEmpty)
   }
+}
 
-  test("WAV envelope is a real RMS: silence and level are measured") {
-    import spark.implicits._
-    val rate = 8000
-    // first half: full-scale square (RMS = 0.5 of full scale);
-    // second half: digital silence
-    val samples = Array.tabulate[Short](rate) { i =>
-      if (i < rate / 2) { if (i % 2 == 0) 16384 else -16384 } else 0
+object MultimodalSpec {
+
+  /** Encode top-down RGB triplets as JPEG via ImageIO (fixture side
+    * of the lossy round-trip test). */
+  def encodeJpeg(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val argb = new Array[Int](w * h)
+    var i = 0
+    while (i < argb.length) {
+      argb(i) = ((rgb(3 * i) & 0xff) << 16) |
+        ((rgb(3 * i + 1) & 0xff) << 8) | (rgb(3 * i + 2) & 0xff)
+      i += 1
     }
-    val df = Seq((1L, Multimodal.encodeWav(rate, 1, samples)))
-      .toDF("media_id", "data")
-    val env = df.select(Multimodal.audioEnvelope(col("data")).as("e"))
-      .collect()(0).getSeq[Float](0)
-    assert(env.length === 16)
-    env.take(8).foreach(v => assert(math.abs(v - 0.5f) < 1e-3,
-      s"active window RMS must be 0.5 full scale, got $v"))
-    env.drop(8).foreach(v => assert(v === 0f,
-      "silent windows must measure exactly zero"))
+    img.setRGB(0, 0, w, h, argb, 0, w)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "jpeg", bos)
+    bos.toByteArray
+  }
+
+  /** Encode top-down RGB triplets as GIF via ImageIO (fixture side of
+    * the palette-lossless round-trip test). The JDK's GIF writer
+    * QUANTIZES direct-color images to its own palette — handing it a
+    * TYPE_INT_RGB frame loses colors even when ≤256 are present — so
+    * the image is built as TYPE_BYTE_INDEXED over an explicit
+    * IndexColorModel holding exactly the distinct source colors
+    * (≤256 required), which the writer emits verbatim. */
+  def encodeGif(w: Int, h: Int, rgb: Array[Byte]): Array[Byte] = {
+    val n = w * h
+    val argb = new Array[Int](n)
+    var i = 0
+    while (i < n) {
+      argb(i) = ((rgb(3 * i) & 0xff) << 16) |
+        ((rgb(3 * i + 1) & 0xff) << 8) | (rgb(3 * i + 2) & 0xff)
+      i += 1
+    }
+    val palette = argb.distinct
+    require(palette.length <= 256,
+      s"GIF fixture needs <=256 distinct colors, got ${palette.length}")
+    val idx = palette.zipWithIndex.toMap
+    val cm = new java.awt.image.IndexColorModel(
+      8, palette.length,
+      palette.map(v => ((v >> 16) & 0xff).toByte),
+      palette.map(v => ((v >> 8) & 0xff).toByte),
+      palette.map(v => (v & 0xff).toByte))
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
+    val raster = img.getRaster
+    i = 0
+    while (i < n) {
+      raster.setSample(i % w, i / w, 0, idx(argb(i)))
+      i += 1
+    }
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "gif", bos)
+    bos.toByteArray
   }
 }

@@ -1,11 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
-import graft.operators.{AsOfJoin, DerivedTable, RangeLayout}
+import graft.operators.{AsOfJoin, DerivedTable}
 import graft.queries.SimGraph
 
 /** Round-11 consolidation items: the shared SimGraph materialization
@@ -221,35 +218,5 @@ class Round11Spec extends SparkTestBase {
       AsOfJoin.priorJoin(left, right, "k", "t", Seq("val"))
     }
     assert(e5.getMessage.contains("collision"))
-  }
-
-  test("curve layouts validate the key domain before normalizing") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_curve_guard_").toString
-    // negative keys: the grid scale would go negative — rejected
-    val neg = Seq((-1L, 5L), (3L, 2L)).toDF("a", "b")
-    val e1 = intercept[IllegalArgumentException] {
-      RangeLayout.writeZOrdered(neg, "a", "b", 4, 2, s"$dir/neg")
-    }
-    assert(e1.getMessage.contains("non-negative"))
-    // max * grid overflows Long — rejected, not silently scattered
-    val huge = Seq((Long.MaxValue / 2, 1L), (7L, 2L)).toDF("a", "b")
-    val e2 = intercept[IllegalArgumentException] {
-      RangeLayout.writeHilbertOrdered(huge, "a", "b", 10, 2, s"$dir/huge")
-    }
-    assert(e2.getMessage.contains("overflow"))
-    // per-row NULL keys are rejected (min/max alone would skip them
-    // and the row would land in an arbitrary curve cell)
-    val withNull = Seq((Some(1L), 5L), (None, 2L), (Some(3L), 4L))
-      .toDF("a", "b")
-    val e3 = intercept[IllegalArgumentException] {
-      RangeLayout.writeZOrdered(withNull, "a", "b", 4, 2, s"$dir/nul")
-    }
-    assert(e3.getMessage.contains("null keys"))
-    // the valid domain still writes (guard is not over-eager)
-    val ok = Tables.t(spark, sf, "orders")
-      .select(col("o_orderkey").as("a"), col("o_custkey").as("b"))
-    RangeLayout.writeZOrdered(ok, "a", "b", 4, 2, s"$dir/ok")
-    assert(spark.read.parquet(s"$dir/ok").count() === ok.count())
   }
 }

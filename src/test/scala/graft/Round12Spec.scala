@@ -4,13 +4,12 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DerivedTable, RangeLayout}
+import graft.operators.DerivedTable
 
 /** Round-12 hardening: DerivedTable's artifact identity now folds in
   * the dataset CONTENT fingerprint and a build version (a committed
   * leftover can never be resurrected against regenerated data or newer
-  * build code), powerSteps fails loudly on ragged embeddings, and the
-  * curve layouts reject the degenerate bits domain.
+  * build code), and powerSteps fails loudly on ragged embeddings.
   */
 class Round12Spec extends SparkTestBase {
 
@@ -237,28 +236,5 @@ class Round12Spec extends SparkTestBase {
     val (x2u, x3u) = graft.queries.Similarity.powerSteps(uniform)
     assert(x2u.count() === 3 && x3u.count() === 3)
     spark.catalog.clearCache()
-  }
-
-  test("curve layouts reject bits outside [1, 31] before any write") {
-    import spark.implicits._
-    val df = Seq((1L, 2L), (3L, 4L)).toDF("a", "b")
-    val out = trackedTempDir("r12_layout_")
-    // bits = 0: grid = 1 makes the overflow guard vacuous and
-    // `max + 1` wraps — must be rejected up front, loudly
-    val e0 = intercept[IllegalArgumentException] {
-      RangeLayout.writeZOrdered(df, "a", "b", 0, 1, s"$out/z0")
-    }
-    assert(e0.getMessage.contains("bits"))
-    val e32 = intercept[IllegalArgumentException] {
-      RangeLayout.writeZOrdered(df, "a", "b", 32, 1, s"$out/z32")
-    }
-    assert(e32.getMessage.contains("bits"))
-    val h0 = intercept[IllegalArgumentException] {
-      RangeLayout.writeHilbertOrdered(df, "a", "b", 0, 1, s"$out/h0")
-    }
-    assert(h0.getMessage.contains("bits"))
-    // the minimal valid domain still writes
-    RangeLayout.writeZOrdered(df, "a", "b", 1, 1, s"$out/z1")
-    assert(spark.read.parquet(s"$out/z1").count() === 2)
   }
 }

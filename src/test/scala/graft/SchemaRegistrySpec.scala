@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.alerts.{ElasticcSchema, RubinSchema}
 import graft.core.SchemaRegistry
+import SchemaRegistrySpec._
 
 /** Versioned-schema behavior: stamp → probe → dispatch → upgrade. */
 class SchemaRegistrySpec extends SparkTestBase {
@@ -49,7 +52,7 @@ class SchemaRegistrySpec extends SparkTestBase {
   }
 
   test("two surveys dispatch end to end: ZTF and Rubin-shaped packets") {
-    import graft.alerts.{AlertSchema, AlertFunctions, RubinSchema}
+    import graft.alerts.{AlertSchema, AlertFunctions}
     // register both surveys' packet schemas with their version strings
     SchemaRegistry.register("ztf", "3.3", AlertSchema.alertSchema)
     SchemaRegistry.register("rubin", "7.0", RubinSchema.alertSchema("7.0"))
@@ -72,7 +75,7 @@ class SchemaRegistrySpec extends SparkTestBase {
         col("diaSource.dec").as("dec"))))
 
     val ztf = SchemaRegistry.stamp(AlertSchema.fixture(spark, 30), "3.3")
-    val rubin = SchemaRegistry.stamp(RubinSchema.fixture(spark, 30), "7.1")
+    val rubin = SchemaRegistry.stamp(rubinFixture(spark, 30), "7.1")
     val ztfOut = SchemaRegistry.dispatch(ztf)(handlers)
     val rubinOut = SchemaRegistry.dispatch(rubin)(handlers)
     assert(ztfOut.columns.toSeq === rubinOut.columns.toSeq)
@@ -83,7 +86,7 @@ class SchemaRegistrySpec extends SparkTestBase {
     // v7.0 → v7.1 upgrade: reliability appears as a typed default
     // inside the nested diaSource struct via Flatten.conform
     val old = SchemaRegistry.stamp(
-      RubinSchema.fixture(spark, 10, version = "7.0"), "7.0")
+      rubinFixture(spark, 10, version = "7.0"), "7.0")
     assert(old.select("diaSource.*").columns.toSeq.contains("reliability") === false)
     val (upgraded, _) = SchemaRegistry.upgradeTo(old, "rubin", "7.1")
     assert(SchemaRegistry.probeVersion(upgraded) === Some("7.1"))
@@ -103,7 +106,6 @@ class SchemaRegistrySpec extends SparkTestBase {
   }
 
   test("schema version compare is numeric, not lexicographic") {
-    import graft.alerts.RubinSchema
     // "10.0" >= "7.1" numerically (lexicographic says no — ADVICE r4);
     // future majors must keep the reliability field
     for (v <- Seq("7.1", "7.2", "8.0", "10.0"))
@@ -115,14 +117,13 @@ class SchemaRegistrySpec extends SparkTestBase {
   }
 
   test("third survey: ELAsTICC classification packing and per-class routing") {
-    import graft.alerts.ElasticcSchema
     import graft.streaming.FilterRegistry
 
     SchemaRegistry.register("elasticc", "0.9", ElasticcSchema.alertSchema())
     for (s <- Seq("elasticc"))
       assert(SchemaRegistry.latest(s).map(_._1) === Some("0.9"))
 
-    val df = SchemaRegistry.stamp(ElasticcSchema.fixture(spark, 40), "0.9")
+    val df = SchemaRegistry.stamp(elasticcFixture(spark, 40), "0.9")
     assert(SchemaRegistry.probeVersion(df) === Some("0.9"))
 
     // version-dispatched formatting, like the other two surveys
@@ -184,5 +185,73 @@ class SchemaRegistrySpec extends SparkTestBase {
       // suites that assert on FilterRegistry.names
       names.foreach(FilterRegistry.unregister)
     }
+  }
+}
+
+object SchemaRegistrySpec {
+
+  /** Deterministic Rubin-shaped batch at schema `version`. */
+  def rubinFixture(
+      spark: SparkSession,
+      n: Int,
+      version: String = "7.1",
+      seed: Long = 4242L): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    val withRel = RubinSchema.versionAtLeast(version, "7.1")
+    val rng = new scala.util.Random(seed)
+    def src(id: Long, mjd: Double): Row = {
+      val base = Seq[Any](
+        id,
+        mjd,
+        rng.nextDouble() * 360.0,
+        math.toDegrees(math.asin(rng.nextDouble() * 2 - 1)),
+        (rng.nextDouble() * 2000).toFloat,
+        (10 + rng.nextDouble() * 100).toFloat,
+        "ugrizy".charAt(rng.nextInt(6)).toString)
+      Row.fromSeq(if (withRel) base :+ rng.nextDouble().toFloat else base)
+    }
+    def forced(id: Long, mjd: Double): Row =
+      Row(id, mjd, (rng.nextDouble() * 500).toFloat,
+        (5 + rng.nextDouble() * 50).toFloat)
+    val rows = (0 until n).map { i =>
+      val objId = 9000000L + i % math.max(n / 3, 1)
+      val mjd = 60800.0 + i.toDouble / 50.0
+      val nPrv = rng.nextInt(4)
+      Row(
+        5000000L + i,
+        src(7000000L + i, mjd),
+        (1 to nPrv).map(h => src(7000000L + i - h * 1000L, mjd - h * 0.07)),
+        (1 to rng.nextInt(3)).map(h =>
+          forced(8000000L + i - h * 1000L, mjd - h * 0.05)),
+        Row(objId, rng.nextDouble() * 360.0,
+          math.toDegrees(math.asin(rng.nextDouble() * 2 - 1)),
+          1 + nPrv))
+    }
+    spark.createDataFrame(rows.asJava, RubinSchema.alertSchema(version))
+  }
+
+  /** Deterministic ELAsTICC-shaped science batch. */
+  def elasticcFixture(spark: SparkSession, n: Int, seed: Long = 909L): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    val rng = new scala.util.Random(seed)
+    val rows = (0 until n).map { i =>
+      Row(
+        3000000L + i,
+        Row(
+          4000000L + i,
+          60500.0 + i.toDouble / 40.0,
+          rng.nextDouble() * 360.0,
+          math.toDegrees(math.asin(rng.nextDouble() * 2 - 1)),
+          (rng.nextDouble() * 1000).toFloat,
+          (5 + rng.nextDouble() * 50).toFloat,
+          "ugrizy".charAt(rng.nextInt(6)).toString),
+        1700000000000L + i * 1000L,
+        rng.nextDouble(),
+        rng.nextDouble(),
+        rng.nextDouble())
+    }
+    spark.createDataFrame(rows.asJava, ElasticcSchema.alertSchema())
   }
 }

@@ -27,18 +27,6 @@ class UpsertSpec extends SparkTestBase {
       (9L, "new", 1))) // inserted
   }
 
-  test("upsertChecked raises on duplicate-keyed update batches") {
-    import spark.implicits._
-    val base = Seq((1L, "a")).toDF("k", "v")
-    val clean = Seq((1L, "A"), (2L, "b")).toDF("k", "v")
-    assert(Upsert.upsertChecked(base, clean, Seq("k")).count() === 2)
-    val duped = Seq((1L, "A"), (1L, "A2")).toDF("k", "v")
-    val e = intercept[IllegalArgumentException] {
-      Upsert.upsertChecked(base, duped, Seq("k"))
-    }
-    assert(e.getMessage.contains("multiple-match"))
-  }
-
   test("a small delta broadcasts: the base is never shuffled") {
     import spark.implicits._
     val base = spark.range(0, 100000)
