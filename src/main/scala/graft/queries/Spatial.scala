@@ -121,8 +121,9 @@ object Spatial extends QueryPack {
         FROM alerts a
         LEFT JOIN nearest n ON a.id = n.id AND n.rk = 1""")),
 
-    // healpix pixel histogram of the pseudo-sky (no healpix in DuckDB →
-    // rows-only; pixel math certified by HealpixSpec/GraftProperties)
+    // healpix pixel histogram of the pseudo-sky. DuckDB has no healpix:
+    // the oracle transcribes Healpix.ang2pixNest at nside 8 (trunc where
+    // Scala truncates with .toLong, integer // and & on the edge lines)
     QueryDef(
       "q43_healpix_hist",
       (s, d) =>
@@ -133,5 +134,42 @@ object Spatial extends QueryPack {
               pseudoDec(col("c_custkey"), 613), 8).as("pixel"))
           .groupBy("pixel")
           .agg(count(lit(1)).as("n")),
-      None))
+      Some("""
+        WITH sky AS (
+          SELECT sin(radians((c_custkey * 613 % 17000)::DOUBLE / 100.0 - 85.0)) AS z,
+            fmod(2.0 * radians(fmod((c_custkey * 997 % 36000)::DOUBLE / 100.0, 360.0))
+              / pi(), 4.0) AS tt
+          FROM customer),
+        eq AS (
+          SELECT z, tt,
+            CAST(trunc(8 * (0.5 + tt) - 8 * z * 0.75) AS BIGINT) AS jp,
+            CAST(trunc(8 * (0.5 + tt) + 8 * z * 0.75) AS BIGINT) AS jm
+          FROM sky WHERE abs(z) <= 2.0 / 3.0),
+        eq_face AS (
+          SELECT CASE WHEN jp // 8 = jm // 8 THEN ((jp // 8) & 3) + 4
+                      WHEN jp // 8 < jm // 8 THEN (jp // 8) & 3
+                      ELSE ((jm // 8) & 3) + 8 END AS face,
+            jm & 7 AS ix, 8 - (jp & 7) - 1 AS iy
+          FROM eq),
+        polar AS (
+          SELECT z, least(3, CAST(trunc(tt) AS BIGINT)) AS ntt,
+            tt - least(3, CAST(trunc(tt) AS BIGINT)) AS tp,
+            8 * sqrt(3.0 * (1.0 - abs(z))) AS tmp
+          FROM sky WHERE abs(z) > 2.0 / 3.0),
+        polar_face AS (
+          SELECT z, ntt,
+            least(CAST(trunc(tp * tmp) AS BIGINT), 7) AS jp,
+            least(CAST(trunc((1.0 - tp) * tmp) AS BIGINT), 7) AS jm
+          FROM polar),
+        faces AS (
+          SELECT face, ix, iy FROM eq_face
+          UNION ALL
+          SELECT CASE WHEN z >= 0 THEN ntt ELSE ntt + 8 END,
+            CASE WHEN z >= 0 THEN 8 - jm - 1 ELSE jp END,
+            CASE WHEN z >= 0 THEN 8 - jp - 1 ELSE jm END
+          FROM polar_face)
+        SELECT face * 64 + (ix & 1) + 2 * (iy & 1) + 2 * (ix & 2)
+            + 4 * (iy & 2) + 4 * (ix & 4) + 8 * (iy & 4) AS pixel,
+          count(*) AS n
+        FROM faces GROUP BY 1""")))
 }

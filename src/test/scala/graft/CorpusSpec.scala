@@ -100,6 +100,10 @@ class CorpusSpec extends SparkTestBase {
     val below = plan.substring(wIdx)
     assert(below.contains("Union"), s"no fallback union under the window:\n$plan")
     assert(below.contains("cutoff"), s"no cutoff prefilter under the window:\n$plan")
+    // Spark's InferWindowGroupLimit turns the row_number<=k filter into
+    // a per-partition bounded top-k instead of ranking every row
+    assert(plan.contains("WindowGroupLimit"),
+      s"q63 lost the group-limit rewrite (full rank materialized):\n$plan")
   }
 
   test("contamination: a verbatim benchmark copy scores ratio 1.0") {

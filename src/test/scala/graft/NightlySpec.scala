@@ -7,7 +7,6 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.alerts.AlertSchema
 import graft.avro.AvroFunctions
-import graft.core.PlanAudit
 import graft.jobs.Nightly
 import graft.streaming.FilterRegistry
 

@@ -1,6 +1,5 @@
 package graft
 
-import graft.core.PlanAudit
 
 /** The typed plan audit agrees with the facts the string-grep specs
   * assert: a map-only query has zero exchanges, a star join has

@@ -4,12 +4,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-import graft.core.Tables.t
-
-/** Physical-plan assertions — the 100 TB scale contract:
-  * filters and column pruning reach the parquet scan, deliberate
-  * broadcasts happen, and no bucketed operator degenerates into a
-  * cartesian product.
+/** Physical-plan assertions the registry golden (QueryPackSpec) cannot
+  * express — the 100 TB scale contract: the filter column reaches the
+  * parquet scan, column pruning, payload-free pair joins, and AQE's
+  * runtime skew split and bloom filter.
   */
 class PlanSpec extends SparkTestBase {
 
@@ -34,7 +32,6 @@ class PlanSpec extends SparkTestBase {
 
   test("q02 pushes its filters into the parquet scan") {
     val p = planString("q02_filter_pushdown")
-    assert(p.contains("PushedFilters: ["), p)
     assert(p.contains("l_quantity"), p)
     // projection pruning: the scan must not read all 16 lineitem cols
     assert(p.contains("ReadSchema"), p)
@@ -46,36 +43,11 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("l_partkey"), s"scan reads unneeded columns:\n$p")
   }
 
-  test("q04 broadcast hint produces a broadcast join") {
-    val p = planString("q04_broadcast_join")
-    assert(p.contains("BroadcastHashJoin"), p)
-  }
-
-  test("LSH dedup and ANN plans contain no cartesian product") {
-    for (q <- Seq("q21_minhash_lsh", "q25_ann_lsh", "q26_embedding_neardup")) {
-      val p = finalPlanString(q)
-      assert(!p.contains("CartesianProduct"), s"$q degenerated:\n$p")
-      assert(!p.contains("BroadcastNestedLoopJoin"), s"$q degenerated:\n$p")
-    }
-  }
-
-  test("q24 brute-force kNN is probe-broadcast, not a shuffle product") {
-    // The deliberate exact baseline: small probe set broadcast against a
-    // single corpus scan (BroadcastNestedLoopJoin on a non-equi condition).
-    val p = finalPlanString("q24_knn_brute")
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
-  }
-
   test("q22 pair join ships ids only: no token arrays below the join") {
     val p = finalPlanString("q22_jaccard_blocked")
-    // the candidate join must exist and the exploded/salted sides must
-    // not carry the hashed-token arrays (they re-attach by id above)
-    assert(!p.contains("CartesianProduct"), p)
-    val joins = p.linesIterator.filter(_.contains("Join")).toList
-    assert(joins.nonEmpty, p)
     // the salt-replicating Generate (explode of the salt sequence) must
-    // project only scalar columns, never `toks`
+    // project only scalar columns, never `toks` (they re-attach by id
+    // above the candidate join)
     val generates = p.linesIterator
       .filter(l => l.contains("Generate explode"))
       .filter(l => l.contains("salt") || l.contains("sequence"))
@@ -83,34 +55,6 @@ class PlanSpec extends SparkTestBase {
     assert(generates.nonEmpty, s"salt explode missing:\n$p")
     generates.foreach(g =>
       assert(!g.contains("toks"), s"token payload rides the salt explode:\n$g"))
-  }
-
-  test("q52 bm25 plans no keyed exchange: stats reduce to one broadcast row") {
-    val p = finalPlanString("q52_bm25")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
-      s"stats row is not broadcast:\n$p")
-    // the only aggregation is the global (keyless) stats reduce; a
-    // HashAggregate keyed on doc columns would mean a corpus shuffle
-    assert(!p.contains("Exchange hashpartitioning"), s"corpus got shuffled:\n$p")
-  }
-
-  test("q54 contamination broadcasts the benchmark set, never the corpus") {
-    val p = finalPlanString("q54_contamination")
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("SortMergeJoin"), s"corpus-side shuffle join:\n$p")
-  }
-
-  test("q53/q55 are single-pass: no join anywhere in the plan") {
-    for (q <- Seq("q53_hash_split", "q55_chunking")) {
-      val p = finalPlanString(q)
-      assert(!p.contains("Join"), s"$q grew a join:\n$p")
-    }
-  }
-
-  test("q45 as-of join plans a window over ONE sort, no join operator") {
-    val p = finalPlanString("q45_asof_join")
-    assert(p.contains("Window"), p)
-    assert(!p.contains("Join"), s"as-of should be join-free:\n$p")
   }
 
   test("AQE splits a skewed join partition at runtime (Y6 scale contract)") {
@@ -176,11 +120,5 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
-  test("whole-stage codegen covers the relational hot path") {
-    // inspect the final AQE plan — pre-execution the adaptive wrapper
-    // hides the codegen stage annotations. In toString form a
-    // WholeStageCodegen stage renders as a "*(n) " operator prefix.
-    val p = finalPlanString("q01_pricing_summary")
-    assert(p.contains("*(1)") || p.contains("WholeStageCodegen"), p)
-  }
+
 }

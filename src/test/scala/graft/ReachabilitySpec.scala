@@ -43,7 +43,6 @@ class ReachabilitySpec extends AnyFunSuite {
     "Tracklets" -> "reference feature: archival tracklet labels (ztf/tracklet_identification.py)",
     "Compaction" -> "reference feature: archival stats-driven compaction (common/partitioning.py)",
     "AvroFiles" -> "reference feature: Avro container-file scan (common/spark_utils.py)",
-    "PlanAudit" -> "instrument: the typed plan pins the specs assert with",
     "QualityMonitor" -> "monitor kept for the spine's in-flight telemetry (ROADMAP.md)",
     "TopKMonitor" -> "monitor kept for the spine's in-flight telemetry (ROADMAP.md)")
 
@@ -100,7 +99,6 @@ class ReachabilitySpec extends AnyFunSuite {
     "CurationStream.pipeline" -> "T7 headroom: the one streaming dedup (ROADMAP.md item 8)",
     "QualityMonitor.start" -> "monitor kept for the spine's in-flight telemetry (ROADMAP.md item 4)",
     "TopKMonitor.start" -> "monitor kept for the spine's in-flight telemetry (ROADMAP.md item 4)",
-    "PlanAudit.summarize" -> "instrument: the typed plan pins the specs assert with (ROADMAP.md item 6)",
     // test hooks over private per-JVM state, which a spec cannot reach
     "DerivedTable.refreshFingerprints" -> "test hook: clears the fingerprint memo",
     "Tables.refreshTables" -> "test hook: clears the table-handle memo",

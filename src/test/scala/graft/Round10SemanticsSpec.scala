@@ -161,8 +161,11 @@ class Round10SemanticsSpec extends SparkTestBase {
       .collect().map(_.getDouble(0))
     assert(lb(0) < lb(1), s"1/1 got ${lb(0)}, 80/100 got ${lb(1)}")
     // and the registered query's outputs are genuine lower bounds
-    val rows = run("q270_wilson_ranking").collect()
+    val q270 = run("q270_wilson_ranking")
+    val rows = q270.collect()
     assert(rows.nonEmpty)
+    val plan = q270.queryExecution.executedPlan.toString
+    assert(plan.contains("HashAggregate"), s"q270 lost its combinable aggregate:\n$plan")
     for (r <- rows) {
       val (n, k, w) = (r.getAs[Long]("n"), r.getAs[Long]("k"),
         r.getAs[Double]("wilson_lb"))
@@ -171,7 +174,8 @@ class Round10SemanticsSpec extends SparkTestBase {
   }
 
   test("q274: Shapley satisfies efficiency and null-player axioms") {
-    val phi = run("q274_shapley_attribution").collect()
+    val q274 = run("q274_shapley_attribution")
+    val phi = q274.collect()
       .map(r => r.getAs[String]("event_type") -> r.getAs[Long]("phi_x24"))
       .toMap
     assert(phi.keySet ==
@@ -189,6 +193,10 @@ class Round10SemanticsSpec extends SparkTestBase {
     // monotonicity: every channel's credit is non-negative (v is
     // monotone in S by construction: more channels ⊇ more masks)
     assert(phi.values.forall(_ >= 0L))
+    // the 16-row coalition lattice rides broadcasts: a sort-merge join
+    // in the final plan would shuffle it
+    val plan = q274.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    assert(!plan.contains("SortMergeJoin"), s"q274 shuffled a 16-row lattice:\n$plan")
   }
 
   test("q276: W1 dominates the mean gap and vanishes on identity") {

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 
 import graft.alerts.{AlertFunctions, AlertSchema, Crossmatch}
 import graft.avro.AvroFunctions
-import graft.core.PlanAudit
 import graft.enrich.ScienceModules
 import graft.jobs.Nightly
 
